@@ -172,7 +172,8 @@ def load(name):
         if not os.path.exists(path):
             if name == "bench_metrics":
                 sys.exit(f"GRAFT_ROUND={want} set but {path} is missing — "
-                         "capture it (scripts/recapture_rN.sh) or unset "
+                         "capture it (graft.Bench with SPARK_GRAFT_BENCH_OUT="
+                         f"{path}) or unset "
                          "GRAFT_ROUND; refusing the unstamped fallback")
             return None
     elif stamped:
@@ -186,13 +187,13 @@ def load(name):
     # Bench after the round's capture — the r11 clobber scenario in
     # flight. Refuse to generate a record that would immediately be
     # out of sync with the freshest data on disk; the operator either
-    # re-stamps (scripts/recapture_rN.sh) or deletes the stray file.
+    # re-stamps (scripts/recapture.sh rN) or deletes the stray file.
     unstamped = f"target/{name}.json"
     if path != unstamped and os.path.exists(unstamped) and \
             os.path.getmtime(unstamped) > os.path.getmtime(path):
         sys.exit(f"PROVENANCE DRIFT: {unstamped} is newer than {path} — "
                  "a post-capture bench run clobbered the unstamped file; "
-                 "recapture (scripts/recapture_rN.sh) or remove it before "
+                 "recapture (scripts/recapture.sh rN) or remove it before "
                  "regenerating the record")
     with open(path, "rb") as f:
         raw = f.read()

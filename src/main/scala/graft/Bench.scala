@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: wall-seconds per registered query at the given SF.
   *
@@ -13,14 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def exec(q: NamedQuery): Unit =
@@ -74,18 +66,7 @@ object Bench {
       }.sorted
       q.name -> (times(times.size / 2), times.last - times.head)
     }
-    // full JSON string escaping (same contract as Verify.q): any bare
-    // control char in an error message would make the whole bench line
-    // unparseable for the driver
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Session.{jsonString => jq}
     // millisecond precision: a full double repr per query pushed the
     // round-5 metric line past the driver's log-tail capture (the
     // BENCH_r05 total came back unparseable) — 83 × ~18 chars of

@@ -230,15 +230,7 @@ object ScaleCorpus {
         val n = args(3).stripPrefix("manysrc")
         if (n.isEmpty) 256 else n.toInt
       } else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-corpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().appName("graft-scale-corpus").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     build(spark, src, out, factor, cleanDocs, manySrc)
     println(s"SCALED $src -> $out factor=$factor" +

@@ -60,7 +60,6 @@ object Tables {
   private def wideScan(spark: SparkSession, dir: String,
                        name: String, idCol: String): DataFrame = {
     val df = table(spark, dir, name)
-    if (sys.env.get("SPARK_GRAFT_WIDE_SCAN").contains("off")) return df
     val cores = spark.sparkContext.defaultParallelism
     val perSession = scanPartsCache.synchronized {
       var m = scanPartsCache.get(spark)
@@ -78,8 +77,8 @@ object Tables {
   /** `events.parquet` stores ts as TIMESTAMP(NANOS), which Spark's parquet
     * reader rejects by default; `nanosAsLong` reads it as epoch-nanos
     * (LongType). The conf is OWNED by session bootstrap — every
-    * engine-built session (Verify / Bench / Time / Explain / tests) sets
-    * it in its builder, and the one externally-owned session (the
+    * engine-built session (the mains and the tests) sets it through
+    * [[Session.builder]], and the one externally-owned session (the
     * driver's smoke session) is patched in [[SparkEntry.entry]]. Loaders
     * must not mutate session state per call.
     */

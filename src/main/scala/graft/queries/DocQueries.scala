@@ -2520,8 +2520,9 @@ object DocQueries {
 
   /** The [[sourceGreedy]] selection loop, returning the per-round picks
     * AND each round's wall seconds — the loop has one spelling; the
-    * registered query consumes the picks, `SourceGreedyBench` (r16
-    * verdict task 7) the cost curve at realistic source counts. */
+    * registered query consumes the picks; the per-round wall curve at
+    * realistic source counts is recorded in COVERAGE.md's round-17
+    * notes (task 7). */
   private[graft] def greedyRounds(s: SparkSession, d: String)
       : (Seq[(Long, String, Long, Long)], Seq[Double]) = {
     graft.functions.GraftFunctions.register(s)
@@ -4160,8 +4161,8 @@ object DocQueries {
     * exchanged rows — and df/cf/postings all come out of ONE
     * aggregate in one pass.
     *
-    * Measured against the window spelling (`graft.PostingBench`,
-    * sf0.1 + 10×): Spark ≥3.5's `WindowGroupLimit` pushdown already
+    * Measured against the window spelling (sf0.1 + 10×, recorded in
+    * COVERAGE.md "Dedup-before-pair-generation, measured"): Spark ≥3.5's `WindowGroupLimit` pushdown already
     * bounds the `row_number ≤ k` window's shuffle (partial group-limit
     * before the exchange — shuffle rows tie), so the heap's win on
     * modern Spark is NOT shuffle volume on this exact pattern; it is

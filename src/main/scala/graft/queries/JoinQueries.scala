@@ -169,7 +169,7 @@ object JoinQueries {
     * oracle as [[revenueRegionMonth]], so correctness of the layout
     * path is hash-gated too.
     *
-    * Measured A/B (r14, `graft.ShuffleBytes`, 32 cores): at 100× the
+    * Measured A/B (COVERAGE.md round-14 notes, 32 cores): at 100× the
     * flat plan exchanges 1.03 GB / 63.0 M rows and spills 6.3 GB mem /
     * 1.0 GB disk (the map-side partial agg's hash map overflows at
     * 100× per-task row counts and falls back to sort — the spill is
@@ -250,8 +250,8 @@ object JoinQueries {
     * wire on ANY broadcast decision. The flat spelling is fine while
     * the dim broadcasts; at real scale supplier is multi-GB, the
     * broadcast disappears, and the flat join must shuffle the whole
-    * fact on l_suppkey — the no-broadcast ShuffleBytes A/B in
-    * COVERAGE.md's round-15 notes measures exactly that contrast.
+    * fact on l_suppkey — the no-broadcast A/B in COVERAGE.md's
+    * round-15 notes measures exactly that contrast.
     * Same oracle as [[topSuppliers]], so the layout path is
     * hash-gated too.
     *

@@ -48,8 +48,8 @@ object Store {
     *   rejected: it changes the on-disk layout every existing reader
     *   globs (month=* gaining a nested bucket=* level) to tighten a
     *   bound that only needs to be approximate.
-    *   This is not only write parallelism: `graft.JoinSkewBench`
-    *   measured that AQE can only split a skewed reduce partition at
+    *   This is not only write parallelism: it was measured (COVERAGE.md
+    *   "Join skew under AQE, measured") that AQE can only split a skewed reduce partition at
     *   MAP-output boundaries — a month written as one giant file is ONE
     *   map task downstream, so a hot month becomes unrecoverable join
     *   skew. Bounded file counts at write time are what keep runtime

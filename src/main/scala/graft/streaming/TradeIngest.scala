@@ -141,8 +141,8 @@ object TradeIngest {
     *   so at firehose rates the single-file discipline also serializes
     *   the decode. `filesPerBatch > 1` switches to `repartition(n)` —
     *   one round-robin shuffle of the batch buys n-way parallel decode
-    *   AND write (measured in `graft.IngestBench`: 9.7× throughput at
-    *   16 files, 8 M rows); size it so files stay near the parquet row-group
+    *   AND write (measured: 9.7× throughput at 16 files, 8 M rows —
+    *   COVERAGE.md "Ingest throughput, measured"); size it so files stay near the parquet row-group
     *   sweet spot and let retention-time compaction (or a wider
     *   `maxFilesPerTrigger`) absorb the extra files. */
   def ingestSink(normalized: DataFrame, tradesPath: String,

@@ -10,7 +10,9 @@ import graft.streaming.AnnMV
 
 /** Streaming ANN-index MV: per-batch nearest-centroid assignment
   * against a frozen quantizer, merged blocks equal the batch Lloyd
-  * assignment, compaction folds losslessly, and the assignment math
+  * assignment, compaction folds losslessly, the cell-partitioned
+  * inverted store's probe prune is sound before and after its
+  * compaction, and the assignment math
   * (argmin L2², tie-break on centroid label) matches the
   * emb_kmeans_refine spelling it shares. */
 class AnnMVSpec extends SparkSpec {
@@ -120,6 +122,56 @@ class AnnMVSpec extends SparkSpec {
 
     AnnMV.writeBlock(vecsDf(batches(2)), cents, partials, blockId = 2L)
     assert(collectAssign(AnnMV.assignments(spark, partials)) == before)
+  }
+
+  test("inverted store: a cell-pruned probe equals the unpruned probe " +
+    "over the same blocks, before and after compactInverted") {
+    graft.functions.GraftFunctions.register(spark)
+    // 3 cells; the probe reads 2 of them
+    val cents3 = {
+      import spark.implicits._
+      Seq((0L, Seq(0.0, 0.0)), (1L, Seq(10.0, 10.0)), (2L, Seq(0.0, 10.0)))
+        .toDF("clabel", "centroid")
+    }
+    val batches: Seq[Seq[(Long, Long, Seq[Float])]] = Seq(
+      Seq((1L, 9L, Seq(1f, 2f)), (2L, 9L, Seq(9f, 9f)), (3L, 9L, Seq(1f, 9f))),
+      Seq((4L, 9L, Seq(2f, 1f)), (5L, 9L, Seq(11f, 12f)), (6L, 9L, Seq(2f, 11f))),
+      Seq((7L, 9L, Seq(3f, 1f)), (8L, 9L, Seq(1f, 12f))))
+    val cells = tmpDir("amv-inv-cells")
+    val flat = tmpDir("amv-inv-flat")
+    // same rows, same block store; only the layout differs — `flat`
+    // keeps `cell` as a data column, so its filter cannot skip files
+    batches.zipWithIndex.foreach { case (rows, b) =>
+      AnnMV.writeInvertedBlock(vecsDf(rows), cents3, cells, b.toLong)
+      graft.store.BlockStore.writeBlock(flat, b.toLong) { tmp =>
+        AnnMV.partialInverted(vecsDf(rows), cents3)
+          .coalesce(1).write.mode("overwrite").parquet(tmp)
+      }
+    }
+    val probes = Seq(0, 2)
+    def probe(path: String) = AnnMV.inverted(spark, path)
+      .where(col("cell").isin(probes: _*))
+      .withColumn("q", typedLit(Seq(1f, 1f)))
+      .select(col("vec_id"), expr("graft_cosine(embedding, q)").as("sim"))
+      .orderBy(col("sim").desc, col("vec_id"))
+      .limit(5)
+    // (rows, files the executed scan read)
+    def run(path: String) = {
+      val df = probe(path)
+      val rows = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      (rows, graft.store.ScanStats.totals(df)._1)
+    }
+
+    val (unpruned, flatFiles) = run(flat)
+    assert(unpruned.size == 5 &&
+      unpruned.map(_._1).toSet.subsetOf(Set(1L, 3L, 4L, 6L, 7L, 8L)))
+    assert(flatFiles == 3)
+    // 3 blocks × 2 probed cells, never the cell=1 directories
+    assert(run(cells) == ((unpruned, 6L)))
+
+    AnnMV.compactInverted(spark, cells, throughBlockId = 2L)
+    // the fold keeps `cell` physical: one block × 2 probed cells
+    assert(run(cells) == ((unpruned, 2L)))
   }
 
   test("per-batch assignment broadcasts the codebook — no shuffle of " +

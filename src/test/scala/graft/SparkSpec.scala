@@ -15,18 +15,15 @@ object TestSession {
   }
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // fixed at 4, not SPARK_GRAFT_CPUS, so the suites run the same
+    // partition shapes on any host
+    val s = Session.builder(cpus = "4")
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // fresh warehouse per JVM: managed-table LOCATIONS persist on disk
       // while the in-memory catalog forgets them, so a reused default
       // warehouse collides on the second run (LOCATION_ALREADY_EXISTS);
       // a shutdown hook removes the temp dir so runs don't litter /tmp
       .config("spark.sql.warehouse.dir", tempWarehouse.toString)
-      .config("spark.ui.enabled", "false")
       // Every stateful streaming suite (sessionization, stream-join,
       // candle merge, dedup) runs under the RocksDB state store — the
       // 100 TB deployment choice, since the default HDFS-backed provider
