@@ -15,10 +15,17 @@ import org.apache.spark.sql.types.TimestampType
   */
 object Results {
 
-  /** Render every timestamp column as an ISO-8601 string, preserving all
-    * other columns and the column order. Python-`isoformat` fraction
-    * rules: no fractional part when the value is second-aligned (the
-    * only case the reference's second-granular `DateTime`,
+  /** Rows → JSON object strings in the query's row order (the reference
+    * preserves ORDER BY order through `rows_to_dicts`), built in ONE
+    * projection over the query. Null columns are emitted EXPLICITLY
+    * (`"sell_vwap": null`) like the reference's row dicts —
+    * `Dataset.toJSON` would drop null fields entirely and change the row
+    * shape per row.
+    *
+    * Timestamp columns render as ISO-8601 strings, other columns pass
+    * through, in the query's column order. Python-`isoformat` fraction
+    * rules: no fractional part when the value is second-aligned (the only
+    * case the reference's second-granular `DateTime`,
     * sql/V1__create_trades_table.sql:9, ever produces — those render
     * byte-identically), a 6-digit fraction otherwise (this engine's
     * timestamps carry micros; truncating them would serialize DISTINCT
@@ -26,28 +33,19 @@ object Results {
     * or re-sorts on the rendered value). Requires the engine's UTC
     * session (`spark.sql.session.timeZone=UTC`, set by all session
     * builders) for the rendered wall time to be the UTC event time. */
-  def isoTimestamps(df: DataFrame): DataFrame =
-    df.select(df.schema.fields.map { f =>
+  def toJsonRows(df: DataFrame): Seq[String] = {
+    val fields = df.schema.fields.map { f =>
+      val c = col(f.name)
       f.dataType match {
         case TimestampType =>
-          when(unix_micros(col(f.name)) % 1000000L === 0,
-            date_format(col(f.name), "yyyy-MM-dd'T'HH:mm:ss"))
-            .otherwise(
-              date_format(col(f.name), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
+          when(unix_micros(c) % 1000000L === 0,
+            date_format(c, "yyyy-MM-dd'T'HH:mm:ss"))
+            .otherwise(date_format(c, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
             .as(f.name)
-        case _ => col(f.name)
+        case _ => c
       }
-    }.toIndexedSeq: _*)
-
-  /** Rows → JSON object strings in the query's row order (the reference
-    * preserves ORDER BY order through `rows_to_dicts`). Null columns are
-    * emitted EXPLICITLY (`"sell_vwap": null`) like the reference's row
-    * dicts — `Dataset.toJSON` would drop null fields entirely and change
-    * the row shape per row. */
-  def toJsonRows(df: DataFrame): Seq[String] = {
-    val src = isoTimestamps(df)
-    src
-      .select(to_json(struct(src.columns.map(col).toIndexedSeq: _*),
+    }
+    df.select(to_json(struct(fields.toIndexedSeq: _*),
         java.util.Map.of("ignoreNullFields", "false")).as("j"))
       .collect().map(_.getString(0)).toIndexedSeq
   }

@@ -11,9 +11,12 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * just as a `PartitionFilters` line in explain output.
   *
   * Run the DataFrame's action first; file metrics are filled in when the
-  * scan resolves its partitions. AQE wraps stages, so the traversal
-  * descends through [[AdaptiveSparkPlanExec]]/[[QueryStageExec]] and into
-  * subqueries.
+  * scan resolves its partitions. Both calls throw instead of reporting
+  * zeros when that has not happened — on an unexecuted frame, or for a
+  * plan with no file scan at all (e.g. one over a cached view) — so a
+  * prune assertion such as `files <= n` can never pass vacuously. AQE
+  * wraps stages, so the traversal descends through
+  * [[AdaptiveSparkPlanExec]]/[[QueryStageExec]] and into subqueries.
   */
 object ScanStats {
 
@@ -27,15 +30,24 @@ object ScanStats {
       case o => (o.children ++ o.subqueries).flatMap(go)
     }
     go(df.queryExecution.executedPlan).map { f =>
-      def m(k: String): Option[Long] = f.metrics.get(k).map(_.value)
-      Scan(m("numFiles").getOrElse(-1L), m("filesSize").getOrElse(-1L),
-        m("numPartitions"))
+      val size = f.metrics("filesSize")
+      // a size metric starts below zero and reads 0 until it is set, so
+      // an untouched one is an unresolved scan, not an empty one
+      if (size.isZero)
+        throw new IllegalStateException(
+          s"scan of ${f.relation.location.rootPaths.mkString(", ")} has not run: " +
+            "execute the DataFrame's action before reading its scan metrics")
+      Scan(f.metrics("numFiles").value, size.value,
+        f.metrics.get("numPartitions").map(_.value))
     }
   }
 
   /** Totals across every file scan in the plan: (files, bytes). */
   def totals(df: DataFrame): (Long, Long) = {
     val s = of(df)
+    if (s.isEmpty)
+      throw new IllegalStateException(
+        "plan has no file scan to total (does it read a cached view?)")
     (s.map(_.files).sum, s.map(_.bytes).sum)
   }
 }
