@@ -108,11 +108,6 @@ object Ops {
     * [[dsumPartial]]). */
   def decFinal(c: Column): Column = decToDouble(sum(c))
 
-  /** Exact decimal → double for a NON-aggregated column — the scalar
-    * sibling of [[decFinal]], for presenting stored decimal partials
-    * (e.g. a candle store's mergeable volume) as doubles. */
-  def decAsDouble(c: Column): Column = decToDouble(c)
-
   /** Exact sum that is 0 (not null) on an empty group — ClickHouse `sum`
     * over zero rows semantics (SURVEY.md §7.5-4). */
   def dsum0(c: Column): Column =

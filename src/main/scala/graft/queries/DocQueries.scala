@@ -834,106 +834,58 @@ object DocQueries {
       |LIMIT 20"""
 
   /** Spark side of [[hammingSelectDuck]]: two 8-bit blocking tables,
-    * bucket-local pair generation, top-20 by the codegen'd
-    * [[graft.functions.HammingDistance]].
+    * block-local pair generation, top-20 by (hamming, doc_a, doc_b)
+    * with the codegen'd [[graft.functions.HammingDistance]].
     *
-    * hamming is computed INSIDE the pair lambda: the cross-block
-    * distinct then shuffles (long, long, int) rows, not pairs dragging
-    * two 32-char signatures — at the dup-heavy 10× corpus the heavier
-    * rows OOM'd an 8 GB driver, the light ones stream fine. distinct on
-    * (doc_a, doc_b, hamming) equals distinct on the pair: hamming is a
-    * pure function of the two docs' signatures.
+    * SIGNATURE-GROUP COLLAPSE: docs with byte-identical signatures (the
+    * dup cliques) are indistinguishable to this operator — within a
+    * group every pair has hamming 0, and against any other group every
+    * member scores the SAME hamming. So the pairing runs over DISTINCT
+    * signatures, and hamming is computed once per GROUP pair instead of
+    * once per member pair. Exact-top-20 reconstruction rests on one
+    * bound, proved by counting: *21 smallest ids per side bound every
+    * top-20 pair list*. If a pair (a, b) uses an id beyond its group's
+    * 21st, the ≥21 smaller same-group ids each form a pair strictly
+    * preceding (a, b) in the total order (same partner, smaller member —
+    * on whichever side of the pair it lands), so ≥21 pairs precede it
+    * and it cannot be top-20. The same argument stacks into nested
+    * bounded selections whose every slice is lossless:
+    *  1. per group pair, top-20 pairs come from ids21 × ids21;
+    *  2. only the top-20 group pairs by (hamming, best pair) can
+    *     contribute (the global cut below);
+    *  3. the union of the within-group and expanded cross pairs cuts to
+    *     the global k=20.
+    * Within-group (hamming-0) pairs skip the join entirely: identical
+    * signatures share every block bucket, so they are always
+    * candidates — emitted once per group.
     *
-    * BUCKET-LOCAL BOUNDED SELECTION: each bucket's pair array is
-    * sorted by the GLOBAL ranking order — hamming leads the struct, so
-    * `array_sort`'s lexicographic struct order IS (hamming, doc_a,
-    * doc_b) — and sliced to the global k=20 before the explode. Sound
-    * because the order is total and a bucket's pairs are a subset of
-    * all pairs: a pair in the global top-20 has <20 pairs ahead of it
-    * anywhere, so it survives the top-20 cut of EVERY bucket that
-    * contains it. What this buys at scale: the per-bucket O(|bucket|²)
-    * hamming term is inherent to exact ranking (and stays inside one
-    * codegen'd fused pass), but the explode → distinct exchange drops
-    * from ~all candidate pairs (~100× inflated on a dup-heavy corpus
-    * — this WAS the top line of the 10× bench at 151 s) to ≤ 20 rows
-    * per bucket. Measured: 151 → 70 s at 10× (sf0.1 unchanged, hash
-    * unchanged); what remains is the in-bucket pair computation
-    * itself, which is exactly the term the registered dedup-first
-    * twin (`docs_dedup_then_simhash`, 2.9 s at the same 10× corpus)
-    * removes by collapsing the cliques before pairing. */
-  private def hammingTopPairs(sig: DataFrame): DataFrame = {
+    * Exactness of the global top-20-group-pairs cut: a group pair G
+    * preceded by ≥20 group pairs in (hamming, best-pair) order
+    * contributes nothing — each predecessor G' contributes at least its
+    * best pair (h', a0', b0'), which precedes EVERY member pair of G
+    * (h' < h, or h' = h and a0' < a0 ≤ least of any G pair, or a0' = a0
+    * and b0' < b0 = min doc_b among G's least-a0 pairs). (hamming, a0,
+    * b0) is unique per group pair — a0/b0 are the two group minima and
+    * minima are distinct across groups — so the order is total and the
+    * cut deterministic. A group pair appears at most TWICE in the join
+    * output (once per block j), so the top-40 raw rows contain the
+    * top-20 DISTINCT group pairs (≤ 2·19 + 2 rows can precede the
+    * 20th), and the duplicate rows are column-identical, so
+    * dropDuplicates keeps exact data.
+    *
+    * The pair term is a streamed self-join of the pinned `groups`
+    * frame: group pairs flow as rows through TakeOrdered's bounded
+    * per-partition heap, parallel across buckets, and both join sides
+    * read the materialized frame instead of re-running the signature
+    * lineage. */
+  private[graft] def hammingTopPairs(sig: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(sig.sparkSession)
-    // SIGNATURE-GROUP COLLAPSE: docs with byte-identical signatures
-    // (the dup cliques) are indistinguishable to this operator —
-    // within a group every pair has hamming 0, and against any other
-    // group every member scores the SAME hamming. So the pairing runs
-    // over DISTINCT signatures, and hamming is computed once per
-    // GROUP pair instead of once per member pair (~100× fewer 32-char
-    // scans on a 10-copy-clique corpus). Exact-top-20 reconstruction
-    // rests on one bound, proved by counting: *21 smallest ids per
-    // side bound every top-20 pair list*. If a pair (a, b) uses an id
-    // beyond its group's 21st, the ≥21 smaller same-group ids each
-    // form a pair strictly preceding (a, b) in the total order
-    // (same partner, smaller member — on whichever side of the pair
-    // it lands), so ≥21 pairs precede it and it cannot be top-20.
-    // The same counting argument stacks twice more, giving nested
-    // bounded selections whose every slice is provably lossless:
-    //  1. per group pair, top-20 pairs come from ids21 × ids21;
-    //  2. per bucket, only the top-20 group pairs by (hamming,
-    //     best pair) can contribute — each better group pair's best
-    //     pair precedes EVERY pair of a dropped one, and (hamming,
-    //     best pair) is unique per group pair (best pair = the two
-    //     group minima, and minima are distinct across groups);
-    //  3. per bucket, the flattened expansion slices to the global
-    //     k=20 (the subset argument of the earlier revision).
-    // Within-group (hamming-0) pairs short-circuit the bucket stage
-    // entirely: identical signatures share every block bucket, so
-    // they are always candidates — emitted once per group, globally.
-    // Measured at the 10× dup-heavy corpus: 151 s (pre-round explode
-    // of all pairs) → 70 s (bucket-local bounded selection,
-    // [[hammingTopPairsFlat]]) → 4.7 s (this revision; recorded
-    // median-of-3, bench_scale10.json — single dev readings ranged
-    // 4.7–5.8 s under host co-tenancy); sf0.01/sf0.1 hashes
-    // unchanged. The collapse costs one extra exchange + a
-    // second signature lineage, so the FLAT tail below stays the
-    // right choice for inputs whose cliques are already removed —
-    // the two tails are result-identical, pure cost alternatives.
-    // r18 kernel rewrite: the per-bucket array lambda evaluated every
-    // bucket's full group-pair cross INSIDE one expression — a single
-    // task per bucket row. Measured skew at sf0.1: 664k group pairs
-    // concentrated in ~6 hot buckets (top bucket 508 groups → 129k
-    // pairs in ONE single-threaded lambda, struct-materialized and
-    // array_sort-ed), while 26 cores idled. The pair term is now a
-    // streamed SELF-JOIN of the (pinned) blocking frame: group pairs
-    // flow as rows through TakeOrdered's bounded per-partition heap —
-    // same hamming count per pair, no struct arrays, no O(n log n)
-    // bucket sorts, parallel across buckets. The historical objection
-    // to a bands⋈bands self-join (the signature lineage re-executes
-    // per side — the reason the lambda shape existed) is nullified by
-    // pinning `groups`: both join sides read the materialized frame.
-    //
-    // Exactness of the global top-20-group-pairs cut (the per-bucket
-    // proof in the git history, applied globally): a group pair G
-    // preceded by ≥20 group pairs in (hamming, best-pair) order
-    // contributes nothing — each predecessor G' contributes at least
-    // its best pair (h', a0', b0'), which precedes EVERY member pair
-    // of G (h' < h, or h' = h and a0' < a0 ≤ least of any G pair, or
-    // a0' = a0 and b0' < b0 = min doc_b among G's least-a0 pairs).
-    // (hamming, a0, b0) is unique per group pair — a0/b0 are the two
-    // group minima and minima are distinct across groups — so the
-    // order is total and the cut deterministic. A group pair appears
-    // at most TWICE in the join output (once per block j), so the
-    // top-40 raw rows contain the top-20 DISTINCT group pairs
-    // (≤ 2·19 + 2 rows can precede the 20th), and the duplicate rows
-    // are column-identical, so dropDuplicates keeps exact data.
     val groups = sig.groupBy("simhash")
       .agg(expr("slice(array_sort(collect_list(doc_id)), 1, 21)").as("ids"))
       .pipe(graft.ops.Ckpt.pin)
     // within-group (hamming-0) pairs: one bounded emission per group
     // with ≥2 members, straight off the pinned frame (a second
-    // reference to a pinned frame costs nothing — the old j=0-bucket
-    // contortion existed only because the unpinned branches would not
-    // unify into a ReusedExchange).
+    // reference to a pinned frame costs nothing)
     val within = groups.where(size(col("ids")) > 1)
       .select(explode(expr(
         """slice(flatten(transform(ids, (x, i) ->
@@ -980,39 +932,6 @@ object DocQueries {
       .limit(20)
   }
 
-  /** The flat (no signature-group collapse) pairing tail: bucket-local
-    * bounded selection only — per-pair hamming inside the lambda, each
-    * bucket's pair array sorted by the global order and sliced to the
-    * global k before the explode (soundness: a globally-top-20 pair
-    * has <20 pairs ahead of it anywhere, so it survives every
-    * containing bucket's cut). Result-identical to
-    * [[hammingTopPairs]]; cheaper when the input carries no dup
-    * cliques (one lineage, one fewer exchange), quadratically worse
-    * when it does — [[dedupThenSimhash]] uses this one BECAUSE its
-    * exact-dedup front half already removed the cliques. */
-  private[graft] def hammingTopPairsFlat(sig: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(sig.sparkSession)
-    // r18 kernel rewrite, same shape as [[hammingTopPairs]]: the
-    // per-bucket collect + pair lambda + array_sort serialized each hot
-    // bucket onto one core; the pinned self-join streams member pairs
-    // through TakeOrdered's bounded heap instead. A pair appears at
-    // most twice (once per block j), so top-40 raw ⊇ top-20 distinct,
-    // and duplicate rows are column-identical (hamming is a function
-    // of the pair), so dropDuplicates is exact.
-    val bands = graft.ops.Ckpt.pin(sig)
-      .select(col("doc_id"), col("simhash"),
-        explode(sequence(lit(0), lit(1))).as("j"))
-      .withColumn("bucket", expr("substring(simhash, 1 + 8 * j, 8)"))
-    bands.as("x").join(bands.as("y"),
-        col("x.j") === col("y.j") && col("x.bucket") === col("y.bucket") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(expr("graft_hamming(x.simhash, y.simhash)").as("hamming"),
-        col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .orderBy(col("hamming"), col("doc_a"), col("doc_b")).limit(40)
-      .dropDuplicates("doc_a", "doc_b")
-      .orderBy(col("hamming"), col("doc_a"), col("doc_b")).limit(20)
-  }
-
   val simhashHamming: NamedQuery = NamedQuery(
     "docs_simhash_hamming",
     s"""WITH ${simhashCteDuck(allDocsSql)},
@@ -1044,7 +963,7 @@ object DocQueries {
       .groupBy(md5(col("text")).as("h"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
-    hammingTopPairsFlat(
+    hammingTopPairs(
       simhashFramesOf(s, reps.join(dd.select("doc_id", "text"), "doc_id")))
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
@@ -20,10 +20,11 @@ import graft.ops.Ops
   *    partial candles carrying `open_ts`/`close_ts`/`block`; readers
   *    merge partials. Late data simply lands as another partial for the
   *    old minute, exactly like the CH MV.
-  *  - [[watermarkedCandles]] — the Spark-native showcase (ST4 option a):
-  *    event-time window aggregation with a watermark; Spark maintains the
-  *    candle state incrementally and emits finalized windows, strictly
-  *    cleaner than the reference (bounded state, no read-side merge).
+  *  - [[watermarkedCandles]] + [[candleSink]] — the Spark-native
+  *    showcase (ST4 option a): event-time window aggregation with a
+  *    watermark; Spark maintains the candle state incrementally and
+  *    emits finalized windows, strictly cleaner than the reference
+  *    (bounded state, no read-side merge).
   *
   * The partial-merge rules match `graft.queries.TradeQueries.candleMerge`
   * (open = open of the partial with the smallest `(open_ts, block)`,
@@ -75,6 +76,8 @@ object CandlePipeline {
       }
       .start()
 
+  /** Fixed-width `(epoch_us, block)` key: it makes `min_by`/`max_by`
+    * deterministic when equal timestamps span blocks. */
   private def tieKey(ts: org.apache.spark.sql.Column) =
     format_string("%019d-%019d", unix_micros(ts), col("block"))
 
@@ -87,25 +90,6 @@ object CandlePipeline {
     * the reference's ReplacingMergeTree replay absorption. */
   private def dedupReplays(partials: DataFrame): DataFrame =
     partials.dropDuplicates("minute", "symbol", "block")
-
-  /** Merge partial candles into one combined PARTIAL per (minute,symbol),
-    * keeping the open_ts/close_ts anchors so the result can merge again
-    * later. The fixed-width `(epoch_us, block)` tie-break key makes
-    * `min_by`/`max_by` deterministic when equal timestamps span blocks. */
-  def mergePartials(partials: DataFrame): DataFrame =
-    dedupReplays(partials)
-      .groupBy("minute", "symbol")
-      .agg(
-        min(col("open_ts")).as("open_ts"),
-        max(col("close_ts")).as("close_ts"),
-        min_by(col("open"), tieKey(col("open_ts"))).as("open"),
-        max(col("high")).as("high"),
-        min(col("low")).as("low"),
-        max_by(col("close"), tieKey(col("close_ts"))).as("close"),
-        // decimal + decimal: exact, and the result stays a mergeable
-        // decimal partial (never round-trips through double)
-        sum(col("volume")).as("volume"),
-        sum(col("trades")).as("trades"))
 
   /** Merge partial candles back into final per-(minute,symbol) candles —
     * the correct-readback query over the partials table (ST4). The
@@ -121,112 +105,6 @@ object CandlePipeline {
         max_by(col("close"), tieKey(col("close_ts"))).as("close"),
         Ops.decFinal(col("volume")).as("volume"),
         sum(col("trades")).as("trades"))
-
-  /** Present a stored MERGEABLE candle row (decimal volume) as the
-    * reader-facing final shape (double volume) — one stateless
-    * projection, the upsert store's read path. */
-  def finalizeCandles(stored: DataFrame): DataFrame =
-    stored.withColumn("volume", Ops.decAsDouble(col("volume")))
-
-  /** Third maintenance variant: an UPSERT candle store on plain parquet.
-    * Each micro-batch merges its partial candles into the stored final
-    * candles for ONLY the (minute, symbol) keys it touched — read the
-    * affected keys' current rows, re-merge, rewrite. Readers see one
-    * final row per key (no read-side merge; [[finalizeCandles]] is the
-    * one-projection read path that closes the mergeable decimal volume
-    * into a double), late data still lands correctly. This is the
-    * merge-on-write point in the design space between [[partialSink]]
-    * (write-cheap, merge-on-read — the reference) and [[candleSink]]
-    * (watermark-final, drops very-late rows). A reader CONCURRENT with
-    * a trigger races the swap's rename pair (the data dir is briefly
-    * absent between the two moves, like every rename-swapped store
-    * here — [[graft.store.Store.swapDirectory]]'s note); a reader that
-    * must never observe that window needs a table format with
-    * transactional commits (Delta/Iceberg), which is also the 100 TB
-    * answer below.
-    *
-    * Scale honesty: the MERGE work is O(touched keys), but this
-    * plain-parquet implementation rewrites the whole candle file per
-    * batch — acceptable while the table is small (minutes × symbols of
-    * the retained window), not at 100 TB. The production shape keeps the
-    * same algebra but partitions the store by day/month and overwrites
-    * only the partitions containing touched keys (or uses a table
-    * format's transactional MERGE — Delta/Iceberg); the replay guard
-    * below stays identical. */
-  def upsertSink(trades: DataFrame, candlesPath: String,
-                 checkpointPath: String,
-                 trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
-      : StreamingQuery =
-    trades.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import java.nio.file.{Files, Paths}
-        val dir = Paths.get(candlesPath, "data")
-        val tmp = Paths.get(candlesPath, ".next")
-        val prev = Paths.get(candlesPath, ".prev")
-        val markerName = "_applied_batch"
-        // Crash recovery for the swap below. The marker is written LAST
-        // into tmp, so its presence proves tmp is a complete new version:
-        // roll it forward. Otherwise a missing live dir means the crash
-        // hit between the two renames: roll the previous version back.
-        // Leftover tmp/prev from a completed swap are just deleted.
-        if (!Files.exists(dir)) {
-          if (Files.exists(tmp.resolve(markerName))) Files.move(tmp, dir)
-          else if (Files.exists(prev)) Files.move(prev, dir)
-        }
-        if (Files.exists(prev)) graft.store.Store.deleteRecursively(prev)
-        if (Files.exists(tmp)) graft.store.Store.deleteRecursively(tmp)
-        // replay guard: foreachBatch is at-least-once, and re-merging an
-        // already-applied batch would double volume/trades. The marker
-        // travels INSIDE the data directory, so the rename commits data +
-        // marker atomically — a replayed batch whose swap completed is
-        // skipped here, one whose swap didn't is re-run against the
-        // recovered previous store. (Underscore-prefixed files are
-        // invisible to parquet readers.)
-        val applied = {
-          val m = dir.resolve(markerName)
-          if (Files.exists(m)) Files.readString(m).trim.toLong else -1L
-        }
-        if (batchId > applied) {
-          // both frames are read several times below (semi + anti joins,
-          // restate union) — cache them so the batch aggregation and the
-          // store scan run once per trigger, not once per use
-          val incoming = partialCandles(batch, batchId).persist()
-          val existing =
-            (if (Files.exists(dir)) spark.read.parquet(dir.toString)
-             else incoming.limit(0)).persist()
-          try {
-            // only partials for keys touched by this batch join the
-            // merge; everything else is carried over untouched
-            val touched = incoming.select("minute", "symbol").distinct()
-            val affected = existing.join(touched, Seq("minute", "symbol"),
-              "left_semi")
-            val untouched = existing.join(touched, Seq("minute", "symbol"),
-              "left_anti")
-            // merged rows keep open_ts/close_ts so they remain mergeable
-            // when later batches touch the same minute again
-            val restate = mergePartials(affected.unionByName(incoming))
-              .withColumn("block", lit(batchId))
-              .select(untouched.columns.map(col).toIndexedSeq: _*)
-            untouched.unionByName(restate)
-              .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-            Files.writeString(tmp.resolve(markerName), batchId.toString)
-            // two atomic renames, never a window with no recoverable
-            // version on disk (deleting the live dir before the new one
-            // lands would lose the whole store on a crash between)
-            if (Files.exists(dir)) Files.move(dir, prev)
-            Files.move(tmp, dir)
-            if (Files.exists(prev)) graft.store.Store.deleteRecursively(prev)
-          } finally {
-            incoming.unpersist()
-            existing.unpersist()
-          }
-        }
-        ()
-      }
-      .start()
 
   /** ST4 option (a): the Spark-native incremental candle stream —
     * watermarked tumbling-window OHLCV with bounded state. Append mode
@@ -248,21 +126,16 @@ object CandlePipeline {
   }
 
   /** Start option (a) writing finalized candles to a parquet table. */
-  /** @param extraOptions writer options forwarded verbatim — the seam
-    *   latency experiments use to flip per-query knobs (e.g.
-    *   `asyncProgressTrackingEnabled`) without forking the sink. */
   def candleSink(trades: DataFrame, candlesPath: String,
                  checkpointPath: String,
                  lateness: String = "2 minutes",
-                 trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-                 extraOptions: Map[String, String] = Map.empty)
+                 trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
       : StreamingQuery =
     watermarkedCandles(trades, lateness).writeStream
       .trigger(trigger)
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointPath)
       .option("path", candlesPath)
-      .options(extraOptions)
       .format("parquet")
       .start()
 }

@@ -133,22 +133,9 @@ object TradeIngest {
     * its partition-drop retention; an unpartitioned append would make
     * them invisible to both. A typical micro-batch touches one month, so
     * the partitioned write costs nothing extra. */
-  /** @param filesPerBatch write parallelism per micro-batch. 1 (the
-    *   default, reference parity) uses `coalesce(1)` — zero shuffle,
-    *   one file per flush, correct for the reference's 500-row/5-s
-    *   trickle. BUT `coalesce` is a narrow dependency: it collapses the
-    *   WHOLE batch lineage (JSON decode included) into that one task,
-    *   so at firehose rates the single-file discipline also serializes
-    *   the decode. `filesPerBatch > 1` switches to `repartition(n)` —
-    *   one round-robin shuffle of the batch buys n-way parallel decode
-    *   AND write (measured: 9.7× throughput at 16 files, 8 M rows —
-    *   COVERAGE.md "Ingest throughput, measured"); size it so files stay near the parquet row-group
-    *   sweet spot and let retention-time compaction (or a wider
-    *   `maxFilesPerTrigger`) absorb the extra files. */
   def ingestSink(normalized: DataFrame, tradesPath: String,
                  checkpointPath: String,
-                 trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-                 filesPerBatch: Int = 1)
+                 trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
       : StreamingQuery =
     normalized.writeStream
       .trigger(trigger)
@@ -159,11 +146,10 @@ object TradeIngest {
         // column (e.g. a batch id) would give the one table two file
         // schemas, and plain spark.read.parquet resolves that
         // nondeterministically from whichever footer it samples
-        val sized = batch
+        batch
           .withColumn("ingested_at", current_timestamp())
           .withColumn("month", graft.ops.Ops.monthKey(col("ts")))
-        (if (filesPerBatch > 1) sized.repartition(filesPerBatch)
-         else sized.coalesce(1))
+          .coalesce(1)
           // month leads the sort or the partitioned writer re-sorts and
           // destroys the (ts, symbol, trade_id) run order (see Store)
           .sortWithinPartitions("month", "ts", "symbol", "trade_id")

@@ -87,33 +87,38 @@ class CandleSpec extends SparkSpec {
     }
   }
 
-  test("sequential restating merge == direct merge, including ts ties across blocks") {
-    // the upsert store's invariant: merging blocks 0..1, restating the
-    // result under a newer block id, then merging block 2 must equal the
-    // direct 3-block merge — ESPECIALLY when open_ts/close_ts tie across
-    // blocks (coarse 10s timestamps force collisions)
+  test("readCandles breaks open_ts/close_ts ties across blocks by block id") {
+    // coarse 10-s timestamps make the time-extreme trade of a
+    // (minute, symbol) tie across blocks; each block holds at most one
+    // trade per (symbol, ts), so the expected open/close is the first/
+    // last trade in (ts, block) order and nothing else is arbitrary
     val rnd = new scala.util.Random(11)
+    var (openTies, closeTies) = (0, 0)
     (1 to 6).foreach { _ =>
-      val rows = (1 to 40).map { i =>
-        ("S" + rnd.nextInt(2), i.toLong,
-          (1 + rnd.nextInt(500)) / 10.0, 1.0,
-          rnd.nextInt(12).toLong * 10L,   // 0..110s in 10s steps → ties
-          rnd.nextInt(3))                 // 3 blocks
-      }
-      val trades = mkTrades(rows)
-      def partials(b: Int) = CandlePipeline.partialCandles(
-        trades.where(col("block") === b), b.toLong)
-      val direct = CandlePipeline
-        .readCandles(partials(0).unionByName(partials(1)).unionByName(partials(2)))
-        .orderBy("minute", "symbol").collect().map(_.toString).toSeq
-      val restated = CandlePipeline
-        .mergePartials(partials(0).unionByName(partials(1)))
-        .withColumn("block", lit(1L)) // restate under the newest merged id
-      val sequential = CandlePipeline
-        .readCandles(restated.unionByName(partials(2)))
-        .orderBy("minute", "symbol").collect().map(_.toString).toSeq
-      assert(sequential == direct)
+      val rows = for {
+        block <- 0 until 3; sym <- Seq("S0", "S1")
+        sec <- 0L until 120L by 10L if rnd.nextDouble() < 0.5
+      } yield (sym, rnd.nextInt(999).toLong,
+        (1 + rnd.nextInt(500)) / 10.0, 1.0, sec, block)
+      val byKey = rows.groupBy(r => (r._5 / 60, r._1)).values
+        .map(_.sortBy(r => (r._5, r._6)))
+      openTies += byKey.count(g => g.size > 1 && g(0)._5 == g(1)._5)
+      closeTies += byKey.count(g => g.size > 1 &&
+        g.last._5 == g(g.size - 2)._5)
+      val expected = byKey
+        .map(g => ((g.head._5 / 60) * 60000L, g.head._1, g.head._3,
+          g.last._3))
+        .toSeq.sortBy(e => (e._1, e._2))
+      val got = viaPartials(mkTrades(rows))
+      assert(got.map(c => (c._1.getTime, c._2, c._3, c._6)).toSeq ==
+        expected)
+      // the tie-free columns still equal the direct aggregation
+      assert(got.map(c => (c._1, c._2, c._4, c._5, c._7, c._8)).toSeq ==
+        direct(mkTrades(rows)).map(c =>
+          (c._1, c._2, c._4, c._5, c._7, c._8)).toSeq)
     }
+    // precondition: the ties this case exists for did occur
+    assert(openTies > 0 && closeTies > 0, s"ties: $openTies / $closeTies")
   }
 
   test("candle invariants: low <= min(open, close) <= max(open, close) <= high") {

@@ -7,8 +7,8 @@ import graft.queries.DocQueries
 
 /** The text/signature-group-collapse machinery against flat reference
   * computations on corpora the driver's SF sets never produce: dup
-  * groups larger than the 21-id bound, interleaved member ids, buckets
-  * past the >64-member branch switch, profile-less dup groups. The
+  * groups larger than the 21-id bound, interleaved member ids, block
+  * buckets of more than 64 docs, profile-less dup groups. The
   * counting-bound proofs in the scaladocs claim losslessness; these
   * corpora make every slice actually cut something, so a broken bound
   * shows up as a row diff, not a silent pass. */
@@ -19,7 +19,7 @@ class CollapseBoundsSpec extends SparkSpec {
     * groups), group B = 25 copies (even ids 2..50) of a near-dup of A,
     * group C = 70 copies of a third near-dup (ids 200..269; identical
     * texts ⇒ identical signatures ⇒ one simhash block bucket holds ≥70
-    * docs, forcing the >64-member bounded branch), 40 distinct
+    * docs), 40 distinct
     * near-dup singles (ids 300..339, same leading tokens → same gram
     * bucket), and a 5-copy SHORT dup group (ids 400..404; <3 tokens,
     * <4 chars) that must never reach any pair. */
@@ -92,12 +92,12 @@ class CollapseBoundsSpec extends SparkSpec {
       collect(flat))
   }
 
-  test("simhash hamming: grouped ranking equals the flat tail over the " +
-    "same signatures, with the >64-member bounded branch exercised") {
+  test("simhash hamming: grouped ranking equals the brute-force " +
+    "reference over the same signatures, with one giant block bucket") {
     val sig = DocQueries.simhashFrames(spark, corpusDir)
-    // branch precondition: at least one (j, bucket) holds > 64 docs,
-    // so the bounded group-pair machinery (not just the small-bucket
-    // full expansion) is what equality below certifies
+    // large-bucket precondition: at least one (j, bucket) holds > 64
+    // docs, so the collapse and the 21-id bound are what equality
+    // below certifies
     val maxBucket = sig
       .select(col("doc_id"), col("simhash"),
         explode(sequence(lit(0), lit(1))).as("j"))
@@ -105,9 +105,9 @@ class CollapseBoundsSpec extends SparkSpec {
       .groupBy("j", "bucket").count()
       .agg(max("count")).head.getLong(0)
     assert(maxBucket > 64,
-      s"corpus no longer exercises the bounded branch (max bucket $maxBucket)")
+      s"corpus no longer holds a giant bucket (max bucket $maxBucket)")
     assert(collect(DocQueries.simhashHamming.run(spark, corpusDir)) ==
-      collect(DocQueries.hammingTopPairsFlat(sig)))
+      CollapseBoundsSpec.bruteHammingTop20(sig))
   }
 
   test("textGroups: a crafted key collision between distinct texts " +
@@ -174,5 +174,24 @@ class CollapseBoundsSpec extends SparkSpec {
       List(sz, cs.size.toLong, cs.map(_._1).min, cs.map(_._1).max)
     }.sortBy(_.head.asInstanceOf[Long])
     assert(collect(DocQueries.dupClusters.run(spark, corpusDir)) == expect)
+  }
+}
+
+object CollapseBoundsSpec {
+
+  /** Collected, plain-Scala brute force for the simhash top-20: every
+    * pair a < b whose signatures share block 0 or block 1 (chars 1–8
+    * or 9–16), hamming = the count of differing characters, ranked by
+    * (hamming, doc_a, doc_b). */
+  def bruteHammingTop20(sig: DataFrame): Seq[Seq[Any]] = {
+    val docs = sig.select("doc_id", "simhash").collect()
+      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+    def block(s: String, j: Int) = s.substring(8 * j, 8 * j + 8)
+    val pairs = for {
+      i <- docs.indices; k <- i + 1 until docs.length
+      (a, sa) = docs(i); (b, sb) = docs(k)
+      if block(sa, 0) == block(sb, 0) || block(sa, 1) == block(sb, 1)
+    } yield (sa.zip(sb).count { case (x, y) => x != y }, a, b)
+    pairs.sorted.take(20).map { case (h, a, b) => List[Any](h, a, b) }
   }
 }

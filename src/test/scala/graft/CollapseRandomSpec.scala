@@ -3,18 +3,22 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
 
 import graft.queries.DocQueries
 
 /** ScalaCheck extension of [[CollapseBoundsSpec]]: the fixed
   * adversarial corpus there pins each collapse against one crafted
-  * input; here RANDOMIZED corpora (random dup-group sizes spanning the
-  * >64-member branch switch, random multiplicities, shared-vocabulary
-  * singles, shorts, interleaved ids, score TIES at the k=20 ranking
-  * boundary) assert collapsed ≡ flat family-wide — jaccard,
-  * containment, simhash-hamming, and dup-cluster component sizes under
-  * multiplicity expansion. Seeded, so a failure replays. */
+  * input; here RANDOMIZED corpora (random dup-group sizes up to block
+  * buckets of more than 64 docs, random multiplicities,
+  * shared-vocabulary singles, shorts, interleaved ids, score TIES at the
+  * k=20 ranking boundary) assert collapsed ≡ flat family-wide —
+  * jaccard, containment, simhash-hamming, and dup-cluster component
+  * sizes under multiplicity expansion. Randomized SIGNATURE sets drive
+  * the simhash group-pair cut directly: double-block collisions and
+  * ≥20 group pairs tied at one distance, against brute force. Seeded,
+  * so a failure replays. */
 class CollapseRandomSpec extends SparkSpec {
 
   /** One generated corpus: dup groups (text, copies) + near-dup singles
@@ -30,8 +34,9 @@ class CollapseRandomSpec extends SparkSpec {
 
   private val corpusGen: Gen[Corpus] = for {
     nGroups <- Gen.choose(2, 4)
-    // at least one group past the 64-member simhash branch switch and
-    // past the 21-id collapse bound, so every slice cuts something
+    // at least one group of more than 64 docs (one giant simhash
+    // block bucket) and past the 21-id collapse bound, so every slice
+    // cuts something
     sizes <- Gen.listOfN(nGroups, Gen.choose(2, 40))
       .map(ss => 70 :: ss)
     // group texts share a long common prefix (same LSH/gram buckets,
@@ -70,17 +75,76 @@ class CollapseRandomSpec extends SparkSpec {
   private def collect(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq.toList).toList
 
-  /** Run a seeded property over `n` random corpora, failing the test
-    * with ScalaCheck's shrunk counterexample on a mismatch. */
-  private def checkCorpora(n: Int)(p: Corpus => Boolean): Unit = {
+  /** Run a seeded property over `n` generated inputs, failing the test
+    * with ScalaCheck's counterexample on a mismatch. */
+  private def check[T](gen: Gen[T], n: Int)(p: T => Prop): Unit = {
     val res = SCTest.check(
       SCTest.Parameters.default
         .withMinSuccessfulTests(n)
         .withMaxDiscardRatio(1.0f)
         .withInitialSeed(Seed(20260814L)),
-      Prop.forAllNoShrink(corpusGen)(c => p(c)))
+      Prop.forAllNoShrink(gen)(p))
     assert(res.passed, res.status.toString)
   }
+
+  private def checkCorpora(n: Int)(p: Corpus => Boolean): Unit =
+    check(corpusGen, n)(c => Prop(p(c)))
+
+  /** One generated signature set: (doc_id, 32-char '0'/'1' signature). */
+  private case class Sigs(rows: Seq[(Long, String)]) {
+    override def toString: String =
+      s"Sigs(${rows.size} docs, ${rows.map(_._2).distinct.size} signatures)"
+  }
+
+  private def bits(n: Int): Gen[String] =
+    Gen.listOfN(n, Gen.oneOf('0', '1')).map(_.mkString)
+
+  /** A cluster of `k` one-hot variants of a base signature, pairwise
+    * at distance 2, plus (sometimes) the base itself at distance 1 from
+    * each, plus noise sharing one or both blocks with the base. With
+    * `bothBlocks` the flipped bits sit in chars 17–32 and the noise
+    * keeps chars 1–16, so every candidate group pair shares BOTH 8-char
+    * blocks and appears twice in the join output; otherwise the flips
+    * sit in chars 9–16 and cluster pairs share block 0 only. Most
+    * groups are singletons (few hamming-0 pairs), so the group-pair cut
+    * decides the top-20; member ids are shuffled. */
+  private def sigGen(bothBlocks: Boolean): Gen[Sigs] = for {
+    base <- bits(32)
+    k <- Gen.choose(7, 8)
+    flips <- Gen.pick(k, if (bothBlocks) 16 until 32 else 8 until 16)
+    withBase <- Gen.oneOf(true, false)
+    nNoise <- Gen.choose(10, 30)
+    noise <- Gen.listOfN(nNoise,
+      if (bothBlocks) bits(16).map(base.take(16) + _)
+      else Gen.zip(Gen.oneOf(0, 1), bits(24)).map { case (j, r) =>
+        r.patch(8 * j, base.slice(8 * j, 8 * j + 8), 0) })
+    mult <- Gen.listOfN(k + 1, Gen.frequency(5 -> 1, 1 -> 2))
+    shuffle <- Gen.long
+  } yield {
+    val cluster = flips.toList.map(i =>
+      base.updated(i, if (base(i) == '0') '1' else '0'))
+    val sigs = (cluster ++ (if (withBase) Seq(base) else Nil))
+      .zip(mult).flatMap { case (g, m) => Seq.fill(m)(g) } ++ noise
+    val ids = new scala.util.Random(shuffle)
+      .shuffle(sigs.indices.map(_ + 1L).toVector)
+    Sigs(ids.zip(sigs))
+  }
+
+  /** (hamming, shares both blocks) for every distinct candidate group
+    * pair — the plain-Scala view of the join output. */
+  private def groupPairs(c: Sigs): Seq[(Int, Boolean)] = {
+    val gs = c.rows.map(_._2).distinct.sorted
+    def block(s: String, j: Int) = s.substring(8 * j, 8 * j + 8)
+    for {
+      i <- gs.indices; k <- i + 1 until gs.size
+      (x, y) = (gs(i), gs(k))
+      shared = (0 to 1).count(j => block(x, j) == block(y, j))
+      if shared > 0
+    } yield (x.zip(y).count { case (p, q) => p != q }, shared == 2)
+  }
+
+  private def sigFrame(c: Sigs): DataFrame =
+    spark.createDataFrame(c.rows).toDF("doc_id", "simhash")
 
   // ---- the flat reference spellings (same as CollapseBoundsSpec) ----
 
@@ -164,8 +228,8 @@ class CollapseRandomSpec extends SparkSpec {
     }
   }
 
-  test("randomized corpora: grouped simhash-hamming == flat tail, with " +
-    "distance ties crossing the k=20 boundary") {
+  test("randomized corpora: grouped simhash-hamming == brute force, " +
+    "with distance ties crossing the k=20 boundary") {
     checkCorpora(4) { c =>
       val dir = writeCorpus(c)
       val sig = DocQueries.simhashFrames(spark, dir)
@@ -174,7 +238,35 @@ class CollapseRandomSpec extends SparkSpec {
       // always lands INSIDE a tie run, so equality below certifies the
       // deterministic (doc_a, doc_b) tie-break through the collapse
       collect(DocQueries.simhashHamming.run(spark, dir)) ==
-        collect(DocQueries.hammingTopPairsFlat(sig))
+        CollapseBoundsSpec.bruteHammingTop20(sig)
+    }
+  }
+
+  test("randomized signatures: double-block collisions (each group pair " +
+    "twice in the join output) == brute force") {
+    check(sigGen(bothBlocks = true), 4) { c =>
+      // precondition: more than 10 double-block group pairs rank at or
+      // before the 20th pair's distance, so a top-20 of raw join rows
+      // (each such pair twice) cannot hold them all
+      val top = CollapseBoundsSpec.bruteHammingTop20(sigFrame(c))
+      val h20 = top.last.head.asInstanceOf[Int]
+      val doubled = groupPairs(c).count(g => g._2 && g._1 <= h20)
+      (doubled > 10) ==>
+        (collect(DocQueries.hammingTopPairs(sigFrame(c))) == top)
+    }
+  }
+
+  test("randomized signatures: ≥20 group pairs tied at one distance, " +
+    "the group-pair cut inside the tie == brute force") {
+    check(sigGen(bothBlocks = false), 4) { c =>
+      // precondition: the 20th ranked pair is a cross-group pair whose
+      // distance holds ≥20 group pairs, and that tie runs past rank 20,
+      // so the top-40 → dropDuplicates → top-20 cut lands inside it
+      val top = CollapseBoundsSpec.bruteHammingTop20(sigFrame(c))
+      val hs = top.map(_.head.asInstanceOf[Int])
+      val tied = groupPairs(c).count(_._1 == hs.last)
+      (hs.last > 0 && tied >= 20 && hs.count(_ < hs.last) + tied > 20) ==>
+        (collect(DocQueries.hammingTopPairs(sigFrame(c))) == top)
     }
   }
 

@@ -100,39 +100,6 @@ class StreamingSpec extends SparkSpec {
       .count() == 20)
   }
 
-  test("firehose sink shape (filesPerBatch > 1) writes the same table") {
-    // the repartition path must change ONLY write parallelism: same
-    // rows, same at-rest schema, same month layout as coalesce(1) —
-    // just more files per batch
-    val src = tmpDir("fire-src")
-    val out = tmpDir("fire-out")
-    val ckpt = tmpDir("fire-ckpt")
-    Files.writeString(Paths.get(src, "batch1.json"),
-      (1 to 40).map(i =>
-        envelope("BTCUSDT", i, s"$i.0", "1.0", 1700000000000L + i * 1000L,
-          i % 2 == 0)).mkString("\n"))
-    val raw = spark.readStream.format("text").load(src)
-    val q = TradeIngest.ingestSink(
-      TradeIngest.normalize(raw), out, ckpt, Trigger.AvailableNow(),
-      filesPerBatch = 4)
-    q.awaitTermination(60000)
-    val written = spark.read.parquet(out)
-    assert(written.count() == 40)
-    assert(written.columns.toSet ==
-      graft.store.Bootstrap.tradesAtRest.fieldNames.toSet)
-    val monthDir = new java.io.File(out, "month=202311")
-    val files = monthDir.listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(files.length > 1 && files.length <= 4,
-      s"expected 2-4 parquet files from filesPerBatch=4, got ${files.length}")
-    // per-file (ts, symbol, trade_id) run order still holds after the
-    // round-robin repartition: sortWithinPartitions runs downstream of it
-    files.foreach { f =>
-      val ts = spark.read.parquet(f.getPath).select("ts", "trade_id")
-        .collect().map(r => (r.getTimestamp(0).getTime, r.getLong(1))).toSeq
-      assert(ts == ts.sorted, s"file ${f.getName} lost its run order")
-    }
-  }
-
   private def tradeJson(sym: String, id: Long, price: Double, qty: Double,
                         epochSec: Long): String =
     s"""{"symbol":"$sym","trade_id":$id,"price":$price,"qty":$qty,"ts":${epochSec * 1000000L}}"""
@@ -193,26 +160,36 @@ class StreamingSpec extends SparkSpec {
       col("minute") === timestamp_seconds(lit(0))).count() >= 2)
   }
 
-  test("upsert candle store: merge-on-write equals batch, late rows included") {
-    val src = tmpDir("upsert-src")
-    val store = tmpDir("upsert-store")
-    val ckpt = tmpDir("upsert-ckpt")
+  test("partial-candle sink: a crash between the parquet append and the " +
+    "offset commit replays the block, and readCandles absorbs the copy") {
+    val src = tmpDir("replay-src")
+    val partials = tmpDir("replay-partials")
+    val ckpt = tmpDir("replay-ckpt")
+    def run(): Unit = CandlePipeline.partialSink(
+      tradeStream(src), partials, ckpt, Trigger.AvailableNow())
+      .awaitTermination(60000)
     Files.writeString(Paths.get(src, "b1.json"), Seq(
       tradeJson("BTC", 1, 100.0, 1.0, 10),
-      tradeJson("BTC", 2, 110.0, 2.0, 50),
-      tradeJson("ETH", 3, 10.0, 1.0, 65)).mkString("\n"))
-    val q1 = CandlePipeline.upsertSink(
-      tradeStream(src), store, ckpt, Trigger.AvailableNow())
-    q1.awaitTermination(60000)
-    // second batch: a LATE row for BTC minute 0 (earlier than the stored
-    // open) plus a new minute — the merge must restate minute 0's open
+      tradeJson("ETH", 2, 10.0, 5.0, 20)).mkString("\n"))
+    run() // block 0
+    // block 1: a new minute and a LATE row that restates minute 0's open
     Files.writeString(Paths.get(src, "b2.json"), Seq(
-      tradeJson("BTC", 4, 95.0, 1.0, 5),
-      tradeJson("BTC", 5, 120.0, 1.0, 70)).mkString("\n"))
-    val q2 = CandlePipeline.upsertSink(
-      tradeStream(src), store, ckpt, Trigger.AvailableNow())
-    q2.awaitTermination(60000)
+      tradeJson("BTC", 3, 120.0, 2.0, 70),
+      tradeJson("BTC", 4, 95.0, 1.0, 5)).mkString("\n"))
+    run()
+    // crash state: block 1's partials are appended, its offsets are
+    // not committed — the restart re-runs batch 1 under the same id
+    val commit = Paths.get(ckpt, "commits", "1")
+    assert(Files.exists(commit))
+    Files.delete(commit)
+    Files.deleteIfExists(Paths.get(ckpt, "commits", ".1.crc"))
+    run()
 
+    val onDisk = spark.read.parquet(partials)
+    def blockRows(b: Long) = onDisk.where(col("block") === b).count()
+    // block 1 holds (BTC, minute 0) and (BTC, minute 1): twice each now
+    assert(blockRows(0L) == 2 && blockRows(1L) == 4,
+      s"expected the replayed block on disk twice, got ${blockRows(1L)} rows")
     val allTrades = spark.read
       .schema("symbol STRING, trade_id LONG, price DOUBLE, qty DOUBLE, ts LONG")
       .json(src)
@@ -221,59 +198,8 @@ class StreamingSpec extends SparkSpec {
       df.select("minute", "symbol", "open", "high", "low", "close",
         "volume", "trades")
         .orderBy("minute", "symbol").collect().map(_.toString).toSeq
-    val stored = snap(CandlePipeline.finalizeCandles(
-      spark.read.parquet(s"$store/data")))
-    val direct = snap(CandlePipeline.candles(allTrades))
-    assert(stored == direct)
-    // exactly one stored row per key — reader needs no merge
-    val dup = spark.read.parquet(s"$store/data")
-      .groupBy("minute", "symbol").count().where(col("count") > 1).count()
-    assert(dup == 0)
-  }
-
-  test("upsert store recovers from a crash between the swap renames") {
-    val src = tmpDir("crash-src")
-    val store = tmpDir("crash-store")
-    val ckpt = tmpDir("crash-ckpt")
-    val data = Paths.get(store, "data")
-    Files.writeString(Paths.get(src, "b1.json"), Seq(
-      tradeJson("BTC", 1, 100.0, 1.0, 10),
-      tradeJson("BTC", 2, 110.0, 2.0, 50)).mkString("\n"))
-    val q1 = CandlePipeline.upsertSink(
-      tradeStream(src), store, ckpt, Trigger.AvailableNow())
-    q1.awaitTermination(60000)
-
-    // crash state A: new version fully written (marker inside), live dir
-    // already renamed away — the next batch must ROLL FORWARD
-    Files.move(data, Paths.get(store, ".next"))
-    Files.writeString(Paths.get(src, "b2.json"), Seq(
-      tradeJson("BTC", 3, 95.0, 1.0, 70)).mkString("\n"))
-    val q2 = CandlePipeline.upsertSink(
-      tradeStream(src), store, ckpt, Trigger.AvailableNow())
-    q2.awaitTermination(60000)
-
-    // crash state B: live dir renamed to .prev, no complete new version —
-    // the next batch must ROLL BACK
-    Files.move(data, Paths.get(store, ".prev"))
-    Files.writeString(Paths.get(src, "b3.json"), Seq(
-      tradeJson("ETH", 4, 10.0, 5.0, 20)).mkString("\n"))
-    val q3 = CandlePipeline.upsertSink(
-      tradeStream(src), store, ckpt, Trigger.AvailableNow())
-    q3.awaitTermination(60000)
-
-    val allTrades = spark.read
-      .schema("symbol STRING, trade_id LONG, price DOUBLE, qty DOUBLE, ts LONG")
-      .json(src)
-      .withColumn("ts", timestamp_micros(col("ts")))
-    def snap(df: org.apache.spark.sql.DataFrame) =
-      df.select("minute", "symbol", "open", "high", "low", "close",
-        "volume", "trades")
-        .orderBy("minute", "symbol").collect().map(_.toString).toSeq
-    assert(snap(CandlePipeline.finalizeCandles(
-      spark.read.parquet(data.toString))) ==
+    assert(snap(CandlePipeline.readCandles(onDisk)) ==
       snap(CandlePipeline.candles(allTrades)))
-    assert(!Files.exists(Paths.get(store, ".next")) &&
-      !Files.exists(Paths.get(store, ".prev")))
   }
 
   test("watermarked streaming candles match batch on closed windows") {
