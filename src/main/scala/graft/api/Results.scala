@@ -32,8 +32,21 @@ object Results {
     * event times identically, breaking any consumer that keys, dedupes,
     * or re-sorts on the rendered value). Requires the engine's UTC
     * session (`spark.sql.session.timeZone=UTC`, set by all session
-    * builders) for the rendered wall time to be the UTC event time. */
-  def toJsonRows(df: DataFrame): Seq[String] = {
+    * builders) for the rendered wall time to be the UTC event time.
+    *
+    * A prepared endpoint request ([[SqlApi.query]]) renders through the
+    * plan prepared with its endpoint, which already holds this projection
+    * ([[render]]) over the endpoint's rows: the request binds its values
+    * into a copy of it and runs that as one job, with no new analysis,
+    * planning or compile (the [[SqlApi]] note). Any other DataFrame is
+    * rendered and collected here. */
+  def toJsonRows(df: DataFrame): Seq[String] = df.queryExecution.logical match {
+    case r: PreparedRequest => r.prepared.jsonRows(r.values)
+    case _ => render(df).collect().map(_.getString(0)).toIndexedSeq
+  }
+
+  /** `df` as one JSON string column `j`, in the format of [[toJsonRows]]. */
+  private[api] def render(df: DataFrame): DataFrame = {
     val fields = df.schema.fields.map { f =>
       val c = col(f.name)
       f.dataType match {
@@ -47,6 +60,5 @@ object Results {
     }
     df.select(to_json(struct(fields.toIndexedSeq: _*),
         java.util.Map.of("ignoreNullFields", "false")).as("j"))
-      .collect().map(_.getString(0)).toIndexedSeq
   }
 }

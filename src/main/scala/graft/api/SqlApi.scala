@@ -1,16 +1,17 @@
 package graft.api
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types.DataType
 
 import graft.Tables
 
-/** S9: parameterized query execution through Spark's named-parameter SQL
-  * API — the engine-side analogue of the reference's server-bound
-  * `%(symbol)s` / `%(minutes)s` parameters
-  * (reference: api/server.py:78,104,127,168,195). Parameters bind as
-  * literals in the analyzed plan, so a bound time cutoff prunes the scan
-  * exactly like the builder path's literal predicate (never a column
-  * comparison), and binding is injection-safe by construction.
+/** S9: parameterized query execution — the engine-side analogue of the
+  * reference's server-bound `%(symbol)s` / `%(minutes)s` parameters
+  * (reference: api/server.py:78,104,127,168,195). Binding is
+  * injection-safe by construction: a value never becomes SQL text.
   *
   * The five reference endpoints are provided as SQL texts over the
   * registered `trades` view, anchored at a bound `:asof` timestamp (the
@@ -18,6 +19,31 @@ import graft.Tables
   * builders in [[graft.queries.TradeQueries]] remain the primary,
   * oracle-checked surface; this is the SQL entry path over the same
   * semantics.
+  *
+  * Prepared endpoints. An endpoint text is parsed, analyzed, optimized
+  * and planned once per registration ([[registerViews]]), on its first
+  * request, and its codegen is compiled on that request's run; later
+  * requests only bind values ([[Prepared]]). What is bound where:
+  *  - `:symbol`, `:minutes` and `:asof` enter the plan as
+  *    [[graft.functions.RequestParam]] leaves, which no rule folds. A
+  *    request binds its values into a copy of the prepared physical plan;
+  *    each subexpression of parameters only (the cutoff
+  *    `timestampadd(MINUTE, -:minutes, :asof)`) is evaluated once into one
+  *    bound value. Generated code reads values by reference, so every
+  *    request reuses the classes the first one compiled.
+  *  - The predicates of the in-memory `trades` scan get the bound cutoff
+  *    as a literal ([[graft.functions.RequestLiteral]]): the scan prunes
+  *    cached batches on `ts >= <literal>` only, never on an expression.
+  *  - `:limit` / `:top` are bound as literals at analysis: a LIMIT must be
+  *    a constant there, and it decides the plan (a top-k
+  *    `TakeOrderedAndProject` keeps that many rows). So each LIMIT value,
+  *    with the text and the parameter types, keys its own prepared plan.
+  * [[Results.toJsonRows]] runs a request's bound copy of the prepared
+  * plan with the JSON rendering inside its projection, outside any SQL
+  * execution: no analysis, optimization, adaptive wrapper or compile per
+  * request. [[query]]'s DataFrame is a [[PreparedRequest]] leaf that
+  * plans onto the bound rows, so any other use of it keeps working. Other
+  * texts, and requests before a registration, run through `spark.sql`.
   *
   * Each request runs as ONE Spark job with one task. `trades` is served
   * from Spark's in-memory columnar cache ([[registerViews]]), and the four
@@ -35,16 +61,26 @@ object SqlApi {
   /** The view [[registerViews]] caches. */
   private val Snapshot = "trades"
 
+  /** What a request's endpoint is prepared for: its text, the types of
+    * its parameters, and its LIMIT values. */
+  private final case class Key(sql: String, types: Map[String, DataType],
+                               limits: Map[String, Literal])
+
+  /** Each session's prepared endpoints, dropped with its snapshot. */
+  private val prepared =
+    new ConcurrentHashMap[SparkSession, ConcurrentHashMap[Key, Prepared]]()
+
   /** Register the corpus tables and the trades role-cast as temp views,
     * and cache `trades` as an in-memory columnar snapshot
     * (`spark.catalog.cacheTable`): requests then scan compressed
     * in-memory batches, pruned by their per-batch `ts` bounds, instead of
-    * reopening and decoding parquet. The snapshot is built by the first
-    * query that reads `trades`, in one extra job (the set-up request of a
-    * server), and lives until [[refreshViews]] (or another registration)
-    * drops it. Spark's cache manager matches plans, so while it lives any
-    * `Tables.trades(spark, dir)` (without a `sinceMicros` cut) over the
-    * same dir in this session reads it too. No other view is cached.
+    * reopening and decoding parquet. The snapshot is built here, so the
+    * first request after a registration runs as one job too, and lives
+    * until [[refreshViews]] (or another registration) drops it together
+    * with the session's prepared endpoints. Spark's cache manager matches
+    * plans, so while it lives any `Tables.trades(spark, dir)` (without a
+    * `sinceMicros` cut) over the same dir in this session reads it too.
+    * No other view is cached.
     *
     * Also installs the engine's optimizer rules: SQL-path time filters
     * over the `events` view hit the CONVERTED timestamp, and
@@ -52,13 +88,14 @@ object SqlApi {
     * raw-column bounds the parquet scan can push.
     *
     * The views pin each table's FILE LISTING at registration time, and
-    * the snapshot pins the trades rows at its first read (the
+    * the snapshot and the prepared endpoints pin the trades rows here (the
     * DataFrame-builder path re-lists per query) — after appending to or
     * regenerating the corpus under a live session, call [[refreshViews]]
     * alongside [[graft.Tables.invalidateAnchor]], or the SQL path reads
     * the old rows (or throws FileNotFound for replaced files). */
   def registerViews(spark: SparkSession, dir: String): Unit = {
     graft.functions.GraftFunctions.installRules(spark)
+    prepared.remove(spark)
     // drop the old snapshot first: the cache manager matches a new
     // registration over the same paths to the old plan and would keep
     // serving the old rows
@@ -70,6 +107,14 @@ object SqlApi {
     }
     Tables.trades(spark, dir).createOrReplaceTempView(Snapshot)
     spark.catalog.cacheTable(Snapshot)
+    // build it now: under AQE, the first request to read an unbuilt cache
+    // would build it in a job of its own
+    spark.table(Snapshot).count()
+    if (!spark.experimental.extraStrategies.contains(PreparedRequestStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ PreparedRequestStrategy
+    prepared.keySet.removeIf(_.sparkContext.isStopped)
+    prepared.put(spark, new ConcurrentHashMap[Key, Prepared]())
   }
 
   /** Drop the `trades` snapshot and re-resolve every registered view's
@@ -82,8 +127,24 @@ object SqlApi {
 
   /** Execute SQL with named parameters (`:name`). */
   def query(spark: SparkSession, sql: String,
-            args: Map[String, Any] = Map.empty): DataFrame =
-    spark.sql(sql, args)
+            args: Map[String, Any] = Map.empty): DataFrame = {
+    val endpoints = prepared.get(spark)
+    endpointParameters.get(sql) match {
+      case Some((names, limitNames)) if endpoints != null &&
+          names.forall(n => args.get(n).exists(_ != null)) =>
+        val values = names.iterator.map(n => n -> Literal(args(n))).toMap
+        val (limits, bound) = values.partition { case (n, _) => limitNames(n) }
+        val key = Key(sql, values.map { case (n, l) => n -> l.dataType }, limits)
+        endpoints.computeIfAbsent(key, k => Prepared(spark, sql, k.types, limits))
+          .request(bound.map { case (n, l) => n -> l.value })
+      case _ => spark.sql(sql, args)
+    }
+  }
+
+  /** Each endpoint text's parameter names, and those of its LIMIT. */
+  private lazy val endpointParameters: Map[String, (Set[String], Set[String])] =
+    Seq(ohlcvSql, topSymbolsSql, liveTradesSql, liveBuySellSql, histBuySellSql)
+      .map(sql => sql -> Prepared.parameters(sql)).toMap
 
   /** The deterministic `:asof` anchor for a corpus dir, at FULL micro
     * precision — the corpus timestamps are not millisecond-aligned, so a

@@ -795,19 +795,6 @@ object DocQueries {
       .limit(50)
   }
 
-  /** SimHash near-dup RANKING — the stage the signature exists for:
-    * docs sharing an 8-bit signature block pair up bucket-locally and
-    * rank by Hamming distance, computed by the engine's codegen'd
-    * [[graft.functions.HammingDistance]] expression — one fused byte
-    * loop per pair where the built-in spelling would run interpreted
-    * per-character lambdas per candidate. TWO blocking tables (the
-    * standard Manku-style multi-block scheme; each block is an 8-bit
-    * rotation of the signature): block j keys on bits 8j+1..8j+8, and
-    * the candidate sets union — a near-dup whose signatures differ
-    * inside the first byte is still caught by the second block. A pair
-    * found by both blocks counts once (distinct before ranking). The
-    * bucket collect is sorted by doc_id, so pair order (doc_a < doc_b)
-    * falls out of the array order. */
   /** The blocking → in-bucket pairing → hamming ranking tail over an
     * `sh(doc_id, simhash)` CTE — shared by [[simhashHamming]] and
     * [[dedupThenSimhash]] (embed-only, margins intact). */
