@@ -209,10 +209,11 @@ object SqlApi {
   /** Q4 `/live_buy_sell` (reference: api/server.py:135-169) — the full
     * builder row shape (volumes, VWAPs, trade rate, total). Spark SQL
     * cannot reuse sibling SELECT aliases (SURVEY.md §7.5-3), so the
-    * aggregate stage is a subquery. */
+    * aggregate stage is a subquery. The rate is null at `:minutes` = 0
+    * (ClickHouse would return `inf`), like the builder's. */
   val liveBuySellSql: String =
     s"""SELECT symbol, buy_volume, sell_volume, buy_vwap, sell_vwap, trades,
-       |       trades / CAST(:minutes AS DOUBLE) AS trades_per_min,
+       |       trades / nullif(CAST(:minutes AS DOUBLE), 0.0) AS trades_per_min,
        |       buy_volume + sell_volume AS total_volume
        |FROM (
        |  SELECT symbol,

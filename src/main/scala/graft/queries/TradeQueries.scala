@@ -105,7 +105,10 @@ object TradeQueries {
     * buy/sell volume split, VWAPs, trade rate; top-k by total volume.
     * ClickHouse reuses sibling SELECT aliases (`buy_volume + sell_volume`,
     * reference: api/server.py:151) — ANSI/Spark can't, so the derived
-    * column lives in a second projection (SURVEY.md §7.5-3). */
+    * column lives in a second projection (SURVEY.md §7.5-3). At a zero
+    * lookback `trades_per_min` is null, as `buy_vwap`/`sell_vwap` are on
+    * zero volume; ClickHouse's float division would return `inf` there,
+    * and ANSI division raises `DIVIDE_BY_ZERO`. */
   val liveBuySell: NamedQuery = NamedQuery(
     "trades_live_buy_sell",
     s"""$tradesWith,
@@ -139,7 +142,8 @@ object TradeQueries {
         Ops.vwap(col("price"), col("qty"), isBuy).as("buy_vwap"),
         Ops.vwap(col("price"), col("qty"), isSell).as("sell_vwap"),
         count(lit(1)).as("trades"),
-        (count(lit(1)) / lit(minutes.toDouble)).as("trades_per_min"))
+        (count(lit(1)) / nullif(lit(minutes.toDouble), lit(0.0d)))
+          .as("trades_per_min"))
       .withColumn("total_volume", col("buy_volume") + col("sell_volume"))
       .orderBy(col("total_volume").desc, col("symbol"))
       .limit(top)

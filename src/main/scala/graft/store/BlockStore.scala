@@ -3,12 +3,17 @@ package graft.store
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-/** The shared block-partial store machinery behind the streaming MVs
-  * ([[graft.streaming.IndexMV]] / [[graft.streaming.DedupMV]] /
-  * [[graft.streaming.AnnMV]]): each micro-batch writes a
-  * `block=<batchId>` partition (through [[Store.swapDirectory]], so
+/** The shared block-partial store machinery behind every block-partial
+  * streaming MV — the candle partials
+  * ([[graft.streaming.CandlePipeline]]), [[graft.streaming.IndexMV]],
+  * [[graft.streaming.DedupMV]], [[graft.streaming.AnnMV]],
+  * [[graft.streaming.HistogramMV]], [[graft.streaming.ProjectionMV]]
+  * and [[graft.streaming.HeavyHitters]]. [[sink]] is the one streaming
+  * query that feeds them: each micro-batch writes a `block=<batchId>`
+  * partition (through [[writeBlock]]'s [[Store.swapDirectory]], so
   * at-least-once replays REPLACE losslessly), reads merge all blocks,
   * [[compact]] folds committed history into one block, and [[expire]]
   * retires old blocks under a persisted watermark (the MV-side analogue
@@ -17,7 +22,8 @@ import org.apache.spark.sql.types.StructType
   * lives in the one audited store implementation). One audited
   * implementation — the compaction/expiry contract (crash-safe
   * parent-level swap, retained-block copy, fold naming, watermark
-  * enforcement) lives here, not three times. */
+  * enforcement) and the sink's replay discipline live here, once for
+  * all seven families. */
 object BlockStore {
 
   /** Expiry watermark sidecar: blocks with id below this value are
@@ -387,6 +393,25 @@ object BlockStore {
       true
     }
   }
+
+  /** The one block-partial streaming sink: every micro-batch commits
+    * through [[writeBlock]] as the block whose id is the batch id, so a
+    * `foreachBatch` replay (a crash between the block write and the
+    * offset commit re-runs the batch under the same id) replaces its
+    * block, and a replay of an expired block is dropped.
+    * `stage(batch)(dir)` writes what the batch's block holds into
+    * `dir`. */
+  def sink(rows: DataFrame, partialsPath: String, checkpointPath: String,
+           trigger: Trigger)(
+      stage: DataFrame => String => Unit): StreamingQuery =
+    rows.writeStream
+      .trigger(trigger)
+      .option("checkpointLocation", checkpointPath)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        writeBlock(partialsPath, batchId)(stage(batch))
+        ()
+      }
+      .start()
 
   /** Merge-on-read frame over every live block; when NO block has
     * committed yet (a continuously-queried MV probed before its first

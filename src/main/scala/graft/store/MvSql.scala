@@ -43,12 +43,9 @@ import org.apache.spark.sql.types.{IntegerType, StringType}
   *    block commit carries the same key type as every later read
   *    (the Scala readback's `keyType` contract, SQL spelling).
   *  - `'candles'` → [[graft.streaming.CandlePipeline.readCandles]] over
-  *    an append-mode partial-candle store `(minute, symbol, open, high,
-  *    low, close, volume, trades)` — the reference's `SELECT * FROM
-  *    trades_1m` readback as a table function. This family predates the
-  *    block store (replay absorption is a per-(minute, symbol, block)
-  *    dedup at merge time, not a directory swap), so the read is a
-  *    plain parquet scan made empty-safe here.
+  *    the partial-candle block store `(minute, symbol, open, high, low,
+  *    close, volume, trades)` — the reference's `SELECT * FROM
+  *    trades_1m` readback as a table function.
   *
   * All reads are empty-safe ([[BlockStore.read]]: a store probed before
   * its first block commit yields an empty frame, not an inference
@@ -78,11 +75,10 @@ object MvSql {
   val kinds: Seq[String] = Seq("index", "dedup_bands", "dedup_candidates",
     "ann_assignments", "ann_inverted", "histogram", "candles")
 
-  /** The candle partials' persisted schema — the empty-store answer for
-    * the `'candles'` kind (this family appends plain parquet, so there
-    * is no block-store schema fallback to lean on). DERIVED from the
-    * authoritative write lineage — `partialCandles` over an empty typed
-    * trades frame, schema-only, no job — so a change to
+  /** The candle partials' schema, `block` included — the empty-store
+    * answer for the `'candles'` kind. DERIVED from the authoritative
+    * write lineage — `partialCandles` over an empty typed trades frame,
+    * schema-only, no job — so a change to
     * [[graft.ops.Ops.ohlcvPartialAggs]] or the decimal width can never
     * silently diverge the probed-before-first-commit read. */
   private def candlePartialSchema(
@@ -94,22 +90,6 @@ object MvSql {
         StructField("ts", TimestampType), StructField("symbol", StringType),
         StructField("price", DoubleType), StructField("qty", DoubleType))))
     graft.streaming.CandlePipeline.partialCandles(trades, 0L).schema
-  }
-
-  private def candleRead(spark: SparkSession, path: String)
-      : org.apache.spark.sql.DataFrame = {
-    val root = java.nio.file.Paths.get(path).toAbsolutePath
-    val hasFiles = java.nio.file.Files.isDirectory(root) && {
-      val s = java.nio.file.Files.list(root)
-      try s.anyMatch(p => p.getFileName.toString.endsWith(".parquet"))
-      finally s.close()
-    }
-    val partials =
-      if (hasFiles) spark.read.parquet(path)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        candlePartialSchema(spark))
-    graft.streaming.CandlePipeline.readCandles(partials)
   }
 
   val builder: Seq[Expression] => LogicalPlan = { children =>
@@ -156,7 +136,8 @@ object MvSql {
         graft.streaming.HistogramMV.merged(spark, path,
           keyType.getOrElse(StringType))
       case "candles" =>
-        candleRead(spark, path)
+        graft.streaming.CandlePipeline.readCandles(
+          BlockStore.read(spark, path, candlePartialSchema(spark)))
       case other => throw new IllegalArgumentException(
         s"graft_mv_read: unknown kind '$other' — expected one of " +
           kinds.mkString("'", "', '", "'"))

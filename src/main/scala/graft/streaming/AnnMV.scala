@@ -3,7 +3,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming ANN-index materialized view — incremental maintenance of
   * the IVF assignment frame, closing the gap the persisted index
@@ -56,11 +55,18 @@ object AnnMV {
     * replay is lossless). */
   def writeBlock(vecs: DataFrame, cents: DataFrame, partialsPath: String,
                  blockId: Long): Unit =
-    graft.store.BlockStore.writeBlock(partialsPath, blockId) { tmp =>
-      partialAssignments(vecs, cents)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-    }
+    graft.store.BlockStore.writeBlock(partialsPath, blockId)(
+      stage(vecs, cents))
+
+  /** Stage one batch's delta into a block dir: the body of
+    * [[writeBlock]] and of a [[graft.store.BlockStore.sink]]. A sink
+    * resolves `cents` once, at start: the frozen-quantizer contract
+    * made physical (a retrain is a new sink + [[compact]], not a
+    * mutation). */
+  def stage(vecs: DataFrame, cents: DataFrame)(dir: String): Unit =
+    partialAssignments(vecs, cents)
+      .coalesce(1)
+      .write.mode("overwrite").parquet(dir)
 
   /** One batch's inverted-list delta: the batch's FULL vector rows laid
     * out `cell`-partitioned — the faiss `add()` shape, where the
@@ -121,21 +127,6 @@ object AnnMV {
     graft.store.BlockStore.compact(spark, invertedPath, throughBlockId,
       partitionCols = Seq("cell"))(
       _.select("vec_id", "label", "embedding", "cell"))
-
-  /** Streaming sink: one assignment block per micro-batch. `cents` is
-    * resolved once at sink start — the frozen-quantizer contract made
-    * physical (a retrain is a new sink + [[compact]], not a mutation). */
-  def annSink(vecs: DataFrame, cents: DataFrame, partialsPath: String,
-              checkpointPath: String,
-              trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
-      : StreamingQuery =
-    vecs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBlock(batch, cents, partialsPath, batchId)
-      }
-      .start()
 
   /** Merge-on-read assignment frame over every stored block. Row-level
     * union — assignment rows are independent facts, so the merge needs

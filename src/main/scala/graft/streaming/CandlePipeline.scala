@@ -16,10 +16,13 @@ import graft.ops.Ops
   * Two fidelity variants, both provided:
   *
   *  - [[partialSink]] + [[readCandles]] — exact reference parity
-  *    (ST4 option b): every micro-batch appends per-(minute,symbol)
-  *    partial candles carrying `open_ts`/`close_ts`/`block`; readers
-  *    merge partials. Late data simply lands as another partial for the
-  *    old minute, exactly like the CH MV.
+  *    (ST4 option b): every micro-batch commits its per-(minute,symbol)
+  *    partial candles, carrying `open_ts`/`close_ts`, as the
+  *    `block=<batchId>` directory of a [[graft.store.BlockStore]];
+  *    readers merge partials. Late data simply lands as another partial
+  *    for the old minute, exactly like the CH MV; a replayed batch
+  *    replaces its block, where the CH MV leaves the copy to
+  *    ReplacingMergeTree.
   *  - [[watermarkedCandles]] + [[candleSink]] — the Spark-native
   *    showcase (ST4 option a): event-time window aggregation with a
   *    watermark; Spark maintains the candle state incrementally and
@@ -56,47 +59,41 @@ object CandlePipeline {
         Ops.ohlcvPartialAggs(col("price"), col("qty"), col("ts")))
       .withColumn("block", lit(blockId))
 
-  /** ST4 option (b): streaming sink appending partial candles per
-    * micro-batch. State is ZERO — each batch aggregates only itself
-    * (typically ≤ minutes×symbols rows), so this scales to any input
-    * rate; the merge cost moves to read time, exactly as in the
-    * reference. */
+  /** ST4 option (b): streaming sink committing each micro-batch's
+    * partial candles as block `block=<batchId>` through
+    * [[graft.store.BlockStore.sink]]. A replayed batch (a crash between
+    * the block write and the offset commit) replaces its block, so each
+    * (minute, symbol, block) partial is on disk once. State is ZERO —
+    * each batch aggregates only itself (typically ≤ minutes×symbols
+    * rows), so this scales to any input rate; the merge cost moves to
+    * read time, exactly as in the reference. */
   def partialSink(trades: DataFrame, partialsPath: String,
                   checkpointPath: String,
                   trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
       : StreamingQuery =
-    trades.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        partialCandles(batch, batchId)
-          .coalesce(1)
-          .write.mode("append").parquet(partialsPath)
-        ()
-      }
-      .start()
+    graft.store.BlockStore.sink(trades, partialsPath, checkpointPath,
+      trigger)(stage)
+
+  /** Stage one batch's partial candles into a block dir: the body of
+    * [[partialSink]]. */
+  def stage(batch: DataFrame)(dir: String): Unit =
+    partialCandles(batch, blockId = 0L)
+      .drop("block") // encoded by the partition directory
+      .coalesce(1)
+      .write.mode("overwrite").parquet(dir)
 
   /** Fixed-width `(epoch_us, block)` key: it makes `min_by`/`max_by`
     * deterministic when equal timestamps span blocks. */
   private def tieKey(ts: org.apache.spark.sql.Column) =
     format_string("%019d-%019d", unix_micros(ts), col("block"))
 
-  /** `foreachBatch` is at-least-once: a crash between a committed parquet
-    * append and the checkpoint commit re-runs the batch and appends the
-    * same (minute, symbol, block) partials a second time. One partial
-    * per (minute, symbol, block) is the sink's invariant and replayed
-    * copies are byte-identical, so dropping duplicates on that key at
-    * merge time absorbs replays exactly — the engine-side analogue of
-    * the reference's ReplacingMergeTree replay absorption. */
-  private def dedupReplays(partials: DataFrame): DataFrame =
-    partials.dropDuplicates("minute", "symbol", "block")
-
   /** Merge partial candles back into final per-(minute,symbol) candles —
-    * the correct-readback query over the partials table (ST4). The
+    * the correct-readback query over the partials table (ST4), whose
+    * `block` column is the block store's partition column. The
     * decimal volume partials close into a double here, ONCE — exactly
     * the value the direct batch aggregation produces. */
   def readCandles(partials: DataFrame): DataFrame =
-    dedupReplays(partials)
+    partials
       .groupBy("minute", "symbol")
       .agg(
         min_by(col("open"), tieKey(col("open_ts"))).as("open"),

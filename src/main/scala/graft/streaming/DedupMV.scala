@@ -3,7 +3,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming near-duplicate index materialized view — incremental
   * maintenance of the MinHash-LSH band index the batch
@@ -76,11 +75,14 @@ object DedupMV {
     * last-write-wins is lossless). */
   def writeBlock(docs: DataFrame, partialsPath: String,
                  blockId: Long): Unit =
-    graft.store.BlockStore.writeBlock(partialsPath, blockId) { tmp =>
-      partialBands(docs)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-    }
+    graft.store.BlockStore.writeBlock(partialsPath, blockId)(stage(docs))
+
+  /** Stage one batch's bands into a block dir: the body of
+    * [[writeBlock]] and of a [[graft.store.BlockStore.sink]]. */
+  def stage(docs: DataFrame)(dir: String): Unit =
+    partialBands(docs)
+      .coalesce(1)
+      .write.mode("overwrite").parquet(dir)
 
   /** The persisted partial schema — also the explicit-schema answer for
     * a read racing the first block commit (empty frame, not an
@@ -98,19 +100,6 @@ object DedupMV {
   def bands(spark: SparkSession, partialsPath: String): DataFrame =
     graft.store.BlockStore.read(spark, partialsPath, bandsSchema)
       .select("doc_id", "band", "bucket")
-
-  /** Streaming sink: one band-index block per micro-batch. */
-  def dedupSink(docs: DataFrame, partialsPath: String,
-                checkpointPath: String,
-                trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
-      : StreamingQuery =
-    docs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBlock(batch, partialsPath, batchId)
-      }
-      .start()
 
   /** Merge-on-read candidate pairs over every stored block: union the
     * band partials and run the SAME bucket-local pair generator as the

@@ -2,13 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming heavy-hitters materialized view on the Misra-Gries
   * mergeable summary ([[graft.functions.MisraGries]]) — the sketch
-  * sibling of [[CandlePipeline.partialSink]]'s partials-then-merge
-  * discipline, for the live "top users/symbols" dashboard query over an
-  * unbounded stream.
+  * sibling of the candle partials, one more block family fed by
+  * [[graft.store.BlockStore.sink]], for the live "top users/symbols"
+  * dashboard query over an unbounded stream.
   *
   * Each micro-batch reduces to ≤ k (item, cnt) rows plus its row count —
   * ZERO streaming state, O(k) stored bytes per batch no matter the
@@ -68,25 +67,16 @@ object HeavyHitters {
     * FileNotFound window; the swap narrows that to two renames. */
   def writeBlock(events: DataFrame, itemCol: String, k: Int,
                  partialsPath: String, blockId: Long): Unit =
-    graft.store.BlockStore.writeBlock(partialsPath, blockId) { tmp =>
-      partialSummary(events, itemCol, k, blockId)
-        .drop("block") // encoded by the partition directory
-        .coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-    }
+    graft.store.BlockStore.writeBlock(partialsPath, blockId)(
+      stage(events, itemCol, k))
 
-  /** Streaming sink: one MG partial block per micro-batch. */
-  def sketchSink(events: DataFrame, itemCol: String, k: Int,
-                 partialsPath: String, checkpointPath: String,
-                 trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
-      : StreamingQuery =
-    events.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBlock(batch, itemCol, k, partialsPath, batchId)
-      }
-      .start()
+  /** Stage one batch's summary into a block dir: the body of
+    * [[writeBlock]] and of a [[graft.store.BlockStore.sink]]. */
+  def stage(events: DataFrame, itemCol: String, k: Int)(dir: String): Unit =
+    partialSummary(events, itemCol, k, blockId = 0L)
+      .drop("block") // encoded by the partition directory
+      .coalesce(1)
+      .write.mode("overwrite").parquet(dir)
 
   /** Total rows summarized — one `batch_n` per block. Exposed for
     * invariant checks; [[candidates]] computes it from its own single

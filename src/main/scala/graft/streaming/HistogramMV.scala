@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming quantile-sketch materialized view on the mergeable
   * equi-width histogram (the streaming sibling of the batch
@@ -61,27 +60,17 @@ object HistogramMV {
   def writeBlock(rows: DataFrame, keyCol: String, valueCol: String,
                  lo: Double, hi: Double, buckets: Int,
                  partialsPath: String, blockId: Long): Unit =
-    graft.store.BlockStore.writeBlock(partialsPath, blockId) { tmp =>
-      partialHistogram(rows, keyCol, valueCol, lo, hi, buckets, blockId)
-        .drop("block") // encoded by the partition directory
-        .coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-    }
+    graft.store.BlockStore.writeBlock(partialsPath, blockId)(
+      stage(rows, keyCol, valueCol, lo, hi, buckets))
 
-  /** Streaming sink: one histogram partial block per micro-batch. */
-  def histSink(rows: DataFrame, keyCol: String, valueCol: String,
-               lo: Double, hi: Double, buckets: Int,
-               partialsPath: String, checkpointPath: String,
-               trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
-      : StreamingQuery =
-    rows.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBlock(batch, keyCol, valueCol, lo, hi, buckets,
-          partialsPath, batchId)
-      }
-      .start()
+  /** Stage one batch's histogram into a block dir: the body of
+    * [[writeBlock]] and of a [[graft.store.BlockStore.sink]]. */
+  def stage(rows: DataFrame, keyCol: String, valueCol: String,
+            lo: Double, hi: Double, buckets: Int)(dir: String): Unit =
+    partialHistogram(rows, keyCol, valueCol, lo, hi, buckets, blockId = 0L)
+      .drop("block") // encoded by the partition directory
+      .coalesce(1)
+      .write.mode("overwrite").parquet(dir)
 
   /** Merged per-key histogram over every stored block — counter
     * addition, the mergeable-sketch operation. Empty-safe and

@@ -3,7 +3,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming inverted-index materialized view — incremental maintenance
   * of the retrieval index the batch `docs_posting_lists` query builds
@@ -75,11 +74,14 @@ object IndexMV {
     * a batch's partial is exact, so last-write-wins is lossless). */
   def writeBlock(docs: DataFrame, k: Int, partialsPath: String,
                  blockId: Long): Unit =
-    graft.store.BlockStore.writeBlock(partialsPath, blockId) { tmp =>
-      partialIndex(docs, k)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-    }
+    graft.store.BlockStore.writeBlock(partialsPath, blockId)(stage(docs, k))
+
+  /** Stage one batch's partial into a block dir: the body of
+    * [[writeBlock]] and of a [[graft.store.BlockStore.sink]]. */
+  def stage(docs: DataFrame, k: Int)(dir: String): Unit =
+    partialIndex(docs, k)
+      .coalesce(1)
+      .write.mode("overwrite").parquet(dir)
 
   /** Batch-BOOTSTRAP ingest: stage every block's index partial from ONE
     * corpus pass — `blockCol` (a pure function of `doc_id`) splits the
@@ -91,8 +93,8 @@ object IndexMV {
     * writeBlock deliveries)` literally. This is the backfill shape at
     * 100 TB: history is aggregated in one pass with per-block atomic
     * commits (per-block [[writeBlock]] would re-scan the corpus once
-    * per block), and the stream then appends new blocks through
-    * [[indexSink]] against the same store. The final repartition by
+    * per block), and the stream then appends new blocks through a
+    * [[graft.store.BlockStore.sink]] of [[stage]] against the same store. The final repartition by
     * block puts each block's rows in one task, so every staged block
     * is one parquet file — the same file shape `writeBlock`'s
     * `coalesce(1)` produces. */
@@ -158,19 +160,6 @@ object IndexMV {
         StructField("id", LongType, nullable = false))),
         containsNull = false))))
   }
-
-  /** Streaming sink: one index partial block per micro-batch. */
-  def indexSink(docs: DataFrame, k: Int, partialsPath: String,
-                checkpointPath: String,
-                trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
-      : StreamingQuery =
-    docs.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBlock(batch, k, partialsPath, batchId)
-      }
-      .start()
 
   /** The partial-merge fold, shared by the read path ([[merged]]) and
     * [[compact]]: counters add; bounded posting heaps union and

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.ops.Ops
@@ -34,8 +33,8 @@ import graft.ops.Ops
   * partials only — readback ∝ |symbols|·|blocks|, never the fact
   * table. ProjectionSinkSpec hash-gates the streamed store against the
   * batch twin over the same delivered rows, replay and expiry
-  * included; MvMaintenanceBench drives the 12-block maintenance
-  * lifecycle and measures probe wall vs block count. */
+  * included; MvMaintenanceSpec drives the 12-block ingest → compact →
+  * expire → replay cycle. */
 object ProjectionMV {
 
   /** The projection partial row: per-symbol count + exact decimal
@@ -46,41 +45,28 @@ object ProjectionMV {
     StructField("cnt", LongType),
     StructField("vol", DecimalType(38, 10))))
 
-  /** Commit one batch as `block=<blockId>`: base rows land first, the
-    * projection is computed FROM THE LANDED FILES (not the in-flight
-    * frame), and the one rename publishes both sides — or nothing.
-    * Returns false when the block id is below the expiry watermark
-    * (the replay-of-expired-data refusal). */
+  /** Commit one batch as `block=<blockId>` through [[stage]]. Returns
+    * false when the block id is below the expiry watermark (the
+    * replay-of-expired-data refusal). */
   def writeBlock(batch: DataFrame, store: String, blockId: Long): Boolean =
-    graft.store.BlockStore.writeBlock(store, blockId) { tmp =>
-      val tmpP = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(tmp))
-      val base = tmpP.resolve("side=base").toString
-      batch.coalesce(1).write.mode("overwrite").parquet(base)
-      batch.sparkSession.read.parquet(base)
-        .groupBy("symbol")
-        .agg(count(lit(1)).as("cnt"), Ops.dsumPartial(col("qty")).as("vol"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(tmpP.resolve("side=proj").toString)
-    }
+    graft.store.BlockStore.writeBlock(store, blockId)(stage(batch))
 
-  /** The streaming sink: one base+projection block per micro-batch,
-    * keyed by the batch id. Plugs into the same
-    * `TradeIngest.normalize` → sink chain as the plain ingest sink;
-    * lifecycle (start/stop/retry) rides [[StreamManager]] like every
-    * other sink here. */
-  def projectionSink(normalized: DataFrame, store: String,
-                     checkpointPath: String,
-                     trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
-      : StreamingQuery =
-    normalized.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBlock(batch, store, batchId)
-        ()
-      }
-      .start()
+  /** Stage one batch's block dir: base rows land first, the projection
+    * is computed FROM THE LANDED FILES (not the in-flight frame), and
+    * the one rename that commits the dir publishes both sides — or
+    * nothing. The body of [[writeBlock]] and of a
+    * [[graft.store.BlockStore.sink]] fed by `TradeIngest.normalize`. */
+  def stage(batch: DataFrame)(dir: String): Unit = {
+    val tmpP = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(dir))
+    val base = tmpP.resolve("side=base").toString
+    batch.coalesce(1).write.mode("overwrite").parquet(base)
+    batch.sparkSession.read.parquet(base)
+      .groupBy("symbol")
+      .agg(count(lit(1)).as("cnt"), Ops.dsumPartial(col("qty")).as("vol"))
+      .coalesce(1)
+      .write.mode("overwrite").parquet(tmpP.resolve("side=proj").toString)
+  }
 
   private def sideDirs(store: String, side: String): List[String] = {
     val root = java.nio.file.Paths.get(store).toAbsolutePath

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.queries.EmbQueries
+import graft.store.BlockStore
 import graft.streaming.AnnMV
 
 /** Streaming ANN-index MV: per-batch nearest-centroid assignment
@@ -65,8 +66,9 @@ class AnnMVSpec extends SparkSpec {
     Files.writeString(Paths.get(src, "b1.json"), Seq(
       vecJson(1, 9, Seq(1, 2)), vecJson(2, 9, Seq(8, 9)))
       .mkString("\n"))
-    assert(AnnMV.annSink(vecStream(src), cents, partials, ckpt,
-      Trigger.AvailableNow()).awaitTermination(120000))
+    assert(BlockStore.sink(vecStream(src), partials, ckpt,
+      Trigger.AvailableNow())(AnnMV.stage(_, cents))
+      .awaitTermination(120000))
     val blocksAfter1 = {
       val s = Files.list(Paths.get(partials))
       try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator())
@@ -77,8 +79,9 @@ class AnnMVSpec extends SparkSpec {
     Files.writeString(Paths.get(src, "b2.json"), Seq(
       vecJson(3, 9, Seq(0, 1)), vecJson(4, 9, Seq(12, 11)))
       .mkString("\n"))
-    assert(AnnMV.annSink(vecStream(src), cents, partials, ckpt,
-      Trigger.AvailableNow()).awaitTermination(120000))
+    assert(BlockStore.sink(vecStream(src), partials, ckpt,
+      Trigger.AvailableNow())(AnnMV.stage(_, cents))
+      .awaitTermination(120000))
 
     val merged = collectAssign(AnnMV.assignments(spark, partials))
     val batch = collectAssign(

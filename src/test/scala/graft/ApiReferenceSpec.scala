@@ -33,8 +33,8 @@ import graft.queries.TradeQueries
   * every double must be bit-identical. `open`/`close` at a timestamp tie
   * may be any tied trade's price: `min_by`/`max_by`, like the
   * reference's `argMin`/`argMax`, leave the tie order unspecified. At
-  * N = 0 `live_buy_sell` divides its trade count by zero, and both paths
-  * must raise the error. Seeded, so a failure replays. */
+  * N = 0 `live_buy_sell`'s `trades_per_min` is null on both paths, as
+  * a VWAP is on zero volume. Seeded, so a failure replays. */
 class ApiReferenceSpec extends SparkSpec with BeforeAndAfterAll {
 
   override def afterAll(): Unit =
@@ -166,7 +166,8 @@ class ApiReferenceSpec extends SparkSpec with BeforeAndAfterAll {
           val bs = buySell(ts)
           val total = bs(0)._2.asInstanceOf[Double] + bs(1)._2.asInstanceOf[Double]
           (-total, s, Seq("symbol" -> s) ++ bs ++
-            Seq("trades_per_min" -> ts.size / n.toDouble, "total_volume" -> total))
+            Seq("trades_per_min" -> (if (n == 0) null else ts.size / n.toDouble),
+              "total_volume" -> total))
         }.sortBy(r => (r._1, r._2))
         (rows.take(c.topLimit).map(_._3), tieAtCut(rows.map(_._1), c.topLimit))
       case "hist_buy_sell" =>
@@ -269,16 +270,7 @@ class ApiReferenceSpec extends SparkSpec with BeforeAndAfterAll {
             endpoint <- Endpoints
             // one symbol per lookback, and one that has no trades
             symbol = (Symbols :+ "none")(i % (Symbols.size + 1))
-            miss <- if (endpoint == "live_buy_sell" && n == 0) {
-              // the trade count divided by a lookback of zero
-              Seq("SqlApi" -> scala.util.Try(request(c, dir, endpoint, symbol, n)),
-                "TradeQueries" -> scala.util.Try(
-                  Results.toJsonRows(twin(c, dir, endpoint, symbol, n)))).collect {
-                case (path, r) if !r.failed.toOption.exists(
-                    _.getMessage.contains("DIVIDE_BY_ZERO")) =>
-                  s"$path $endpoint N=0: $r, want DIVIDE_BY_ZERO"
-              }
-            } else {
+            miss <- {
               val (want, tie) = reference(c, endpoint, symbol, n)
               if (tie) cutTies += 1
               if (want.isEmpty) empties += 1

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.queries.DocQueries
+import graft.store.BlockStore
 import graft.streaming.DedupMV
 
 /** Streaming near-dup index MV: merged candidate pairs equal the batch
@@ -49,8 +50,9 @@ class DedupMVSpec extends SparkSpec {
 
     Files.writeString(Paths.get(src, "b1.json"), Seq(
       docJson(1, d1), docJson(2, d2), docJson(3, d3)).mkString("\n"))
-    assert(DedupMV.dedupSink(docStream(src), partials, ckpt,
-      Trigger.AvailableNow()).awaitTermination(120000))
+    assert(BlockStore.sink(docStream(src), partials, ckpt,
+      Trigger.AvailableNow())(DedupMV.stage)
+      .awaitTermination(120000))
     val after1 = collectPairs(DedupMV.candidates(spark, partials))
     assert(after1 == batchCand(src))
     assert(after1.contains((1L, 2L)), "near-dup pair missing")
@@ -59,8 +61,9 @@ class DedupMVSpec extends SparkSpec {
     // cross-batch case is the point of the MV
     Files.writeString(Paths.get(src, "b2.json"), Seq(
       docJson(4, d4), docJson(5, d5)).mkString("\n"))
-    assert(DedupMV.dedupSink(docStream(src), partials, ckpt,
-      Trigger.AvailableNow()).awaitTermination(120000))
+    assert(BlockStore.sink(docStream(src), partials, ckpt,
+      Trigger.AvailableNow())(DedupMV.stage)
+      .awaitTermination(120000))
     val after2 = collectPairs(DedupMV.candidates(spark, partials))
     assert(after2 == batchCand(src))
     assert(after2.contains((1L, 4L)) && after2.contains((2L, 4L)),

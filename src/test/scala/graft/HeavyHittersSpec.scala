@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.store.BlockStore
 import graft.streaming.HeavyHitters
 
 /** Streaming MG sketch store: per-batch partials, cross-batch merge
@@ -32,16 +33,18 @@ class HeavyHittersSpec extends SparkSpec {
       (1 to n).map { _ => id += 1; eventJson(id, user) }
     Files.writeString(Paths.get(src, "b1.json"),
       (rows(1L, 60) ++ (100L to 119L).flatMap(rows(_, 1))).mkString("\n"))
-    assert(HeavyHitters.sketchSink(eventStream(src), "user_id", k, partials,
-      ckpt, Trigger.AvailableNow()).awaitTermination(120000),
+    assert(BlockStore.sink(eventStream(src), partials, ckpt,
+      Trigger.AvailableNow())(HeavyHitters.stage(_, "user_id", k))
+      .awaitTermination(120000),
       "delivery 1 did not finish")
 
     // delivery 2: user 2 surges (50), user 1 keeps going (20), more noise
     Files.writeString(Paths.get(src, "b2.json"),
       (rows(2L, 50) ++ rows(1L, 20) ++ (200L to 219L).flatMap(rows(_, 1)))
         .mkString("\n"))
-    assert(HeavyHitters.sketchSink(eventStream(src), "user_id", k, partials,
-      ckpt, Trigger.AvailableNow()).awaitTermination(120000),
+    assert(BlockStore.sink(eventStream(src), partials, ckpt,
+      Trigger.AvailableNow())(HeavyHitters.stage(_, "user_id", k))
+      .awaitTermination(120000),
       "delivery 2 did not finish")
 
     val n = HeavyHitters.totalN(spark.read.parquet(partials))

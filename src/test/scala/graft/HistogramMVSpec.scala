@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.store.BlockStore
 import graft.streaming.HistogramMV
 
 /** Streaming histogram-sketch store: per-batch partials, exact
@@ -33,16 +34,18 @@ class HistogramMVSpec extends SparkSpec {
     val d1 = (0 until 10).map(i => rowJson("a", 5.0 + 10 * i)) ++
       Seq.fill(4)(rowJson("b", 33.0))
     Files.writeString(Paths.get(src, "b1.json"), d1.mkString("\n"))
-    assert(HistogramMV.histSink(rowStream(src), "symbol", "price",
-      Lo, Hi, Buckets, partials, ckpt, Trigger.AvailableNow())
+    assert(BlockStore.sink(rowStream(src), partials, ckpt,
+      Trigger.AvailableNow())(
+      HistogramMV.stage(_, "symbol", "price", Lo, Hi, Buckets))
       .awaitTermination(120000), "delivery 1 did not finish")
 
     // delivery 2: b spreads out; out-of-domain values clamp to the
     // edge buckets instead of failing
     val d2 = Seq(rowJson("b", 77.0), rowJson("b", -5.0), rowJson("b", 105.0))
     Files.writeString(Paths.get(src, "b2.json"), d2.mkString("\n"))
-    assert(HistogramMV.histSink(rowStream(src), "symbol", "price",
-      Lo, Hi, Buckets, partials, ckpt, Trigger.AvailableNow())
+    assert(BlockStore.sink(rowStream(src), partials, ckpt,
+      Trigger.AvailableNow())(
+      HistogramMV.stage(_, "symbol", "price", Lo, Hi, Buckets))
       .awaitTermination(120000), "delivery 2 did not finish")
 
     // parity: merged streaming counters == batch histogram of the union

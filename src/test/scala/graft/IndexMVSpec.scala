@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.store.BlockStore
 import graft.streaming.IndexMV
 
 /** Streaming inverted-index MV: merged blocks equal the batch index
@@ -51,8 +52,9 @@ class IndexMVSpec extends SparkSpec {
       docJson(1, "cat cat cat"),
       docJson(2, "cat dog"),
       docJson(3, "dog dog dog dog")).mkString("\n"))
-    assert(IndexMV.indexSink(docStream(src), K, partials, ckpt,
-      Trigger.AvailableNow()).awaitTermination(120000))
+    assert(BlockStore.sink(docStream(src), partials, ckpt,
+      Trigger.AvailableNow())(IndexMV.stage(_, K))
+      .awaitTermination(120000))
 
     // delivery 2: four more docs shift both df and the top-k postings —
     // doc 6's tf=5 must displace batch-1 postings after the merge
@@ -61,8 +63,9 @@ class IndexMVSpec extends SparkSpec {
       docJson(5, "owl owl"),
       docJson(6, "cat cat cat cat cat"),
       docJson(7, "dog cat")).mkString("\n"))
-    assert(IndexMV.indexSink(docStream(src), K, partials, ckpt,
-      Trigger.AvailableNow()).awaitTermination(120000))
+    assert(BlockStore.sink(docStream(src), partials, ckpt,
+      Trigger.AvailableNow())(IndexMV.stage(_, K))
+      .awaitTermination(120000))
 
     val merged = collectIndex(IndexMV.merged(spark, partials, K))
     assert(merged == collectIndex(batchIndex(src)))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.store.BlockStore
 import graft.streaming.{AnnMV, DedupMV, HistogramMV, IndexMV}
 
 /** `graft_mv_read` — the SQL surface over the streaming-MV block
@@ -141,8 +142,8 @@ class MvSqlSpec extends SparkSpec {
     assert(post.collect().map(_.getLong(0)).toSet == Set(7L, 9L))
   }
 
-  test("kind 'candles': SQL equals readCandles over appended partial " +
-    "blocks, absorbing an at-least-once replay") {
+  test("kind 'candles': SQL equals readCandles over the partial-candle " +
+    "block store; a replayed block replaces its first write") {
     import spark.implicits._
     import graft.streaming.CandlePipeline
     val partials = tmpDir("mvsql-candles")
@@ -153,13 +154,11 @@ class MvSqlSpec extends SparkSpec {
       rows.toDF("ts", "symbol", "price", "qty")
     val b0 = tradesDf(Seq((t0, "btc", 100.0, 1.5), (t1, "btc", 101.0, 2.0)))
     val b1 = tradesDf(Seq((t2, "btc", 99.0, 1.0), (t0, "eth", 10.0, 3.0)))
-    CandlePipeline.partialCandles(b0, 0L)
-      .write.mode("append").parquet(partials)
-    CandlePipeline.partialCandles(b1, 1L)
-      .write.mode("append").parquet(partials)
-    // at-least-once replay: block 1's byte-identical partials land again
-    CandlePipeline.partialCandles(b1, 1L)
-      .write.mode("append").parquet(partials)
+    BlockStore.writeBlock(partials, 0L)(CandlePipeline.stage(b0))
+    BlockStore.writeBlock(partials, 1L)(CandlePipeline.stage(b1))
+    // at-least-once replay: block 1 is written again
+    BlockStore.writeBlock(partials, 1L)(CandlePipeline.stage(b1))
+    assert(spark.read.parquet(s"$partials/block=1").count() == 2L)
     val viaSql = sql1(
       s"SELECT * FROM graft_mv_read('$partials', 'candles')" +
         " ORDER BY minute, symbol")
@@ -168,12 +167,12 @@ class MvSqlSpec extends SparkSpec {
     val got = viaSql.collect().map(_.toString).toSeq
     assert(got == CandlePipeline.readCandles(spark.read.parquet(partials))
       .orderBy("minute", "symbol").collect().map(_.toString).toSeq)
-    // the replayed block did not double-count: btc minute 10:00 keeps
-    // volume 3.5 over 2 trades
-    val btc = viaSql.collect().find(r => r.getString(1) == "btc" &&
+    // the replayed block replaced its first write: eth minute 10:00, in
+    // block 1 only, keeps volume 3.0 over 1 trade
+    val eth = viaSql.collect().find(r => r.getString(1) == "eth" &&
       r.getTimestamp(0) == java.sql.Timestamp.valueOf("2024-01-10 10:00:00"))
       .get
-    assert(btc.getDouble(6) == 3.5 && btc.getLong(7) == 2L)
+    assert(eth.getDouble(6) == 3.0 && eth.getLong(7) == 1L)
   }
 
   test("every kind is empty-safe before the first block commit") {

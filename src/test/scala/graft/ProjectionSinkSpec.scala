@@ -6,15 +6,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Ops
+import graft.store.BlockStore
 import graft.streaming.{ProjectionMV, StreamManager, TradeIngest}
 
 /** Projection maintenance in the REAL streaming sink (r17):
-  * `TradeIngest.normalize` → [[ProjectionMV.projectionSink]] over N
-  * micro-batches commits base + per-symbol aggregate projection per
-  * block; the projection readback must equal the batch aggregation
-  * over the same delivered rows, survive an at-least-once replay, and
-  * refuse a replay of an expired block — base and projection as one
-  * atomic unit throughout. */
+  * `TradeIngest.normalize` → a [[graft.store.BlockStore.sink]] of
+  * [[ProjectionMV.stage]] over N micro-batches commits base +
+  * per-symbol aggregate projection per block; the projection readback
+  * must equal the batch aggregation over the same delivered rows,
+  * survive an at-least-once replay, and refuse a replay of an expired
+  * block — base and projection as one atomic unit throughout. */
 class ProjectionSinkSpec extends SparkSpec {
 
   private def envelope(sym: String, id: Long, price: String, qty: String,
@@ -53,10 +54,10 @@ class ProjectionSinkSpec extends SparkSpec {
     stageDeliveries(src)
 
     val mgr = new StreamManager("projection-ingest")
-    mgr.start(() => ProjectionMV.projectionSink(
+    mgr.start(() => BlockStore.sink(
       TradeIngest.normalize(
         spark.readStream.option("maxFilesPerTrigger", 1).text(src)),
-      store, ckpt, Trigger.AvailableNow()))
+      store, ckpt, Trigger.AvailableNow())(ProjectionMV.stage))
     spark.streams.active.foreach(_.awaitTermination(120000))
     assert(mgr.currentState == "idle")
     assert(mgr.status("last_error") == null)
@@ -79,10 +80,10 @@ class ProjectionSinkSpec extends SparkSpec {
     val store = tmpDir("projreplay-store") + "/proj"
     val ckpt = tmpDir("projreplay-ckpt")
     stageDeliveries(src)
-    val q = ProjectionMV.projectionSink(
+    val q = BlockStore.sink(
       TradeIngest.normalize(
         spark.readStream.option("maxFilesPerTrigger", 1).text(src)),
-      store, ckpt, Trigger.AvailableNow())
+      store, ckpt, Trigger.AvailableNow())(ProjectionMV.stage)
     q.awaitTermination(120000)
 
     val want = rows(ProjectionMV.probe(spark, store))
@@ -128,10 +129,10 @@ class ProjectionSinkSpec extends SparkSpec {
     val store = tmpDir("projcompact-store") + "/proj"
     val ckpt = tmpDir("projcompact-ckpt")
     stageDeliveries(src)
-    val q = ProjectionMV.projectionSink(
+    val q = BlockStore.sink(
       TradeIngest.normalize(
         spark.readStream.option("maxFilesPerTrigger", 1).text(src)),
-      store, ckpt, Trigger.AvailableNow())
+      store, ckpt, Trigger.AvailableNow())(ProjectionMV.stage)
     q.awaitTermination(120000)
 
     val want = rows(ProjectionMV.probe(spark, store))

@@ -160,8 +160,8 @@ class StreamingSpec extends SparkSpec {
       col("minute") === timestamp_seconds(lit(0))).count() >= 2)
   }
 
-  test("partial-candle sink: a crash between the parquet append and the " +
-    "offset commit replays the block, and readCandles absorbs the copy") {
+  test("partial-candle sink: a crash between the block write and the " +
+    "offset commit replays the batch, and the replay replaces its block") {
     val src = tmpDir("replay-src")
     val partials = tmpDir("replay-partials")
     val ckpt = tmpDir("replay-ckpt")
@@ -177,19 +177,20 @@ class StreamingSpec extends SparkSpec {
       tradeJson("BTC", 3, 120.0, 2.0, 70),
       tradeJson("BTC", 4, 95.0, 1.0, 5)).mkString("\n"))
     run()
-    // crash state: block 1's partials are appended, its offsets are
-    // not committed — the restart re-runs batch 1 under the same id
+    // crash state: block 1 is committed, its offsets are not — the
+    // restart re-runs batch 1 under the same id
     val commit = Paths.get(ckpt, "commits", "1")
     assert(Files.exists(commit))
     Files.delete(commit)
     Files.deleteIfExists(Paths.get(ckpt, "commits", ".1.crc"))
     run()
+    assert(Files.exists(commit), "the restart did not re-run batch 1")
 
     val onDisk = spark.read.parquet(partials)
-    def blockRows(b: Long) = onDisk.where(col("block") === b).count()
-    // block 1 holds (BTC, minute 0) and (BTC, minute 1): twice each now
-    assert(blockRows(0L) == 2 && blockRows(1L) == 4,
-      s"expected the replayed block on disk twice, got ${blockRows(1L)} rows")
+    def blockRows(b: Int) = onDisk.where(col("block") === b).count()
+    // block 1 holds (BTC, minute 0) and (BTC, minute 1), once each
+    assert(blockRows(0) == 2 && blockRows(1) == 2,
+      s"expected the replayed block on disk once, got ${blockRows(1)} rows")
     val allTrades = spark.read
       .schema("symbol STRING, trade_id LONG, price DOUBLE, qty DOUBLE, ts LONG")
       .json(src)
