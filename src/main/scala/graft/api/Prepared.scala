@@ -1,6 +1,10 @@
 package graft.api
 
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.NamedParameter
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
@@ -9,20 +13,42 @@ import org.apache.spark.sql.catalyst.plans.logical.{
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.types.DataType
+import org.apache.spark.storage.StorageLevel
 
-import graft.functions.{RequestLiteral, RequestParam}
+import graft.functions.{RequestParam, RequestSlot, SlotLiteral}
 
-/** One endpoint text, parsed, analyzed, optimized and planned once; see
-  * [[SqlApi]] for what is bound where.
+/** One endpoint text, parsed, analyzed, optimized, planned, compiled and
+  * built into one RDD once; see [[SqlApi]] for what is bound where.
   *
-  * @param rows the endpoint's rows, analyzed with unbound
-  *   [[RequestParam]]s */
+  * @param rows the endpoint's rows, analyzed with [[RequestParam]]s */
 private[graft] final class Prepared(spark: SparkSession, rows: DataFrame) {
 
+  /** The subexpressions of request parameters only that [[plan]] reads
+    * as [[RequestSlot]]s, by slot index. */
+  private val slots = mutable.ArrayBuffer.empty[Expression]
+
   /** The [[Results]] JSON rendering over [[rows]], planned and prepared
-    * for execution without adaptive execution. */
-  private val rendered: SparkPlan = GraftBridge.prepareWithoutAdaptive(spark,
-    Results.render(rows).queryExecution.sparkPlan)
+    * for execution without adaptive execution, with each subexpression of
+    * request parameters only a [[RequestSlot]], or in the predicates of
+    * the in-memory scan a [[SlotLiteral]], so that the scan prunes cached
+    * batches on it. */
+  private[graft] val plan: SparkPlan = Prepared.mapParameterOnly(
+    GraftBridge.prepareWithoutAdaptive(spark,
+      Results.render(rows).queryExecution.sparkPlan)) { (e, inScan) =>
+    val i = slots.indexWhere(_.semanticEquals(e)) match {
+      case -1 => slots += e; slots.size - 1
+      case i => i
+    }
+    val slot = RequestSlot(i, e.sql, e.dataType, e.nullable)
+    if (inScan) new SlotLiteral(slot) else slot
+  }
+
+  /** [[plan]]'s RDD, built with `execute()` (a driver-side `executeCollect`
+    * would evaluate slots outside any task). Each request runs it again:
+    * a shuffle in it would serve its first run's output to every later
+    * one, so the endpoint texts plan none. */
+  private val rdd: RDD[InternalRow] = GraftBridge.withSessionConf(spark)(plan.execute())
+  require(!Prepared.shuffles(rdd), s"a prepared endpoint plans a shuffle: $plan")
 
   /** [[rows]] as planned, before the execution preparations: the plan of
     * [[PreparedRequest]]'s DataFrame path, planned on its first use. A
@@ -44,20 +70,26 @@ private[graft] final class Prepared(spark: SparkSession, rows: DataFrame) {
   def request(values: Map[String, Any]): DataFrame =
     GraftBridge.ofRows(spark, PreparedRequest(this, values))
 
+  /** [[raw]] with the slot values of `values` bound as plain literals. */
   private[api] def rawPlan(values: Map[String, Any]): SparkPlan =
-    Prepared.bind(raw, values)
+    Prepared.mapParameterOnly(raw)((e, _) => Literal(Prepared.value(e, values), e.dataType))
 
-  /** The bound copy of [[rendered]] that [[jsonRows]] runs. */
-  private[graft] def renderedPlan(values: Map[String, Any]): SparkPlan =
-    Prepared.bind(rendered, values)
-
-  /** The JSON rows `values` select: the bound copy of [[rendered]] runs
-    * as one job, with no analysis, planning or SQL execution. */
-  private[api] def jsonRows(values: Map[String, Any]): Seq[String] =
-    GraftBridge.withSessionConf(spark) {
-      renderedPlan(values).executeCollect()
-        .map(_.getUTF8String(0).toString).toIndexedSeq
-    }
+  /** The JSON rows `values` select: the slot values are evaluated once
+    * here, sent to the tasks as this thread's local properties for one
+    * job over [[rdd]], and the thread's own properties restored. No
+    * analysis, planning, codegen or SQL execution. */
+  private[api] def jsonRows(values: Map[String, Any]): Seq[String] = {
+    val sc = spark.sparkContext
+    val keys = slots.indices.map(RequestSlot.key)
+    val previous = keys.map(sc.getLocalProperty)
+    try {
+      keys.zip(slots).foreach { case (k, e) =>
+        sc.setLocalProperty(k, RequestSlot.encode(Prepared.value(e, values)))
+      }
+      GraftBridge.withSessionConf(spark)(sc.runJob(rdd, Prepared.json))
+        .iterator.flatten.toIndexedSeq
+    } finally keys.zip(previous).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
 }
 
 private[api] object Prepared {
@@ -73,30 +105,34 @@ private[api] object Prepared {
     new Prepared(spark, GraftBridge.ofRows(spark, plan))
   }
 
-  /** A copy of `plan` with `values` bound: each subexpression that
-    * depends on request parameters only (the time cutoff
-    * `timestampadd(MINUTE, -:minutes, :asof)`, `:symbol`) becomes one
-    * bound [[RequestParam]] carrying its value, or in the predicates of an
-    * in-memory scan one [[RequestLiteral]], so that the scan prunes
-    * cached batches on it. Only the nodes above a bound expression are
-    * copied. */
-  def bind(plan: SparkPlan, values: Map[String, Any]): SparkPlan =
+  /** `plan` with each maximal subexpression of request parameters only
+    * (the time cutoff `timestampadd(MINUTE, -:minutes, :asof)`,
+    * `:symbol`) replaced by `f(e, inScan)`, `inScan` when it is in the
+    * predicates of an in-memory scan. Only the nodes above a replaced
+    * expression are copied. */
+  def mapParameterOnly(plan: SparkPlan)(f: (Expression, Boolean) => Expression): SparkPlan =
     plan.transformUp { case p =>
-      val asLiteral = p.isInstanceOf[InMemoryTableScanExec]
+      val inScan = p.isInstanceOf[InMemoryTableScanExec]
       p.mapExpressions(_.transformDown {
         case e if !e.isInstanceOf[NamedExpression] &&
-            e.exists(_.isInstanceOf[RequestParam]) =>
-          val closed = e.transform {
-            case RequestParam(n, t, _) => Literal(values(n), t)
-          }
-          if (!closed.foldable) e
-          else if (asLiteral) new RequestLiteral(closed.eval(), e.dataType)
-          else RequestParam(e match {
-            case RequestParam(n, _, _) => n
-            case _ => e.sql
-          }, e.dataType, closed.eval())
+            e.exists(_.isInstanceOf[RequestParam]) &&
+            e.transform { case r: RequestParam => Literal.default(r.dataType) }.foldable =>
+          f(e, inScan)
       })
     }
+
+  /** The value of `e`, of request parameters only, for `values`. */
+  def value(e: Expression, values: Map[String, Any]): Any =
+    e.transform { case RequestParam(n, t) => Literal(values(n), t) }.eval()
+
+  private val json = (rows: Iterator[InternalRow]) =>
+    rows.map(_.getUTF8String(0).toString).toArray
+
+  /** Whether running `rdd` runs a shuffle, above any persisted RDD. */
+  private def shuffles(rdd: RDD[_]): Boolean = rdd.dependencies.exists {
+    case _: org.apache.spark.ShuffleDependency[_, _, _] => true
+    case d => d.rdd.getStorageLevel == StorageLevel.NONE && shuffles(d.rdd)
+  }
 
   /** The names of the parameters in `sql`, and of those in a LIMIT. */
   def parameters(sql: String): (Set[String], Set[String]) = {
@@ -112,9 +148,9 @@ private[api] object Prepared {
 }
 
 /** A request to a [[Prepared]] endpoint as a logical leaf:
-  * [[PreparedRequestStrategy]] plans it onto the bound copy of the
-  * prepared plan, and [[Results.toJsonRows]] runs its rendered plan
-  * directly. */
+  * [[PreparedRequestStrategy]] plans it onto the prepared plan with the
+  * request's values as literals, and [[Results.toJsonRows]] runs the
+  * prepared RDD with them directly. */
 private[graft] case class PreparedRequest(prepared: Prepared, values: Map[String, Any])
     extends LeafNode {
   override def output: Seq[Attribute] = prepared.output

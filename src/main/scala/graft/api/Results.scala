@@ -35,11 +35,12 @@ object Results {
     * builders) for the rendered wall time to be the UTC event time.
     *
     * A prepared endpoint request ([[SqlApi.query]]) renders through the
-    * plan prepared with its endpoint, which already holds this projection
-    * ([[render]]) over the endpoint's rows: the request binds its values
-    * into a copy of it and runs that as one job, with no new analysis,
-    * planning or compile (the [[SqlApi]] note). Any other DataFrame is
-    * rendered and collected here. */
+    * RDD prepared with its endpoint, whose plan already holds this
+    * projection ([[render]]) over the endpoint's rows: the request sends
+    * its slot values to that RDD's tasks and runs it as one job that
+    * collects the JSON strings, with no new analysis, planning, plan copy
+    * or codegen (the [[SqlApi]] note). Any other DataFrame is rendered
+    * and collected here. */
   def toJsonRows(df: DataFrame): Seq[String] = df.queryExecution.logical match {
     case r: PreparedRequest => r.prepared.jsonRows(r.values)
     case _ => render(df).collect().map(_.getString(0)).toIndexedSeq

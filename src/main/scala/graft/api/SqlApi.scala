@@ -20,41 +20,48 @@ import graft.Tables
   * oracle-checked surface; this is the SQL entry path over the same
   * semantics.
   *
-  * Prepared endpoints. An endpoint text is parsed, analyzed, optimized
-  * and planned once per registration ([[registerViews]]), on its first
-  * request, and its codegen is compiled on that request's run; later
-  * requests only bind values ([[Prepared]]). What is bound where:
+  * Prepared endpoints. An endpoint text is parsed, analyzed, optimized,
+  * planned, compiled and built into one RDD once per registration
+  * ([[registerViews]]) and `LIMIT` value, on its first request
+  * ([[Prepared]]). What is bound where:
   *  - `:symbol`, `:minutes` and `:asof` enter the plan as
-  *    [[graft.functions.RequestParam]] leaves, which no rule folds. A
-  *    request binds its values into a copy of the prepared physical plan;
-  *    each subexpression of parameters only (the cutoff
-  *    `timestampadd(MINUTE, -:minutes, :asof)`) is evaluated once into one
-  *    bound value. Generated code reads values by reference, so every
-  *    request reuses the classes the first one compiled.
-  *  - The predicates of the in-memory `trades` scan get the bound cutoff
-  *    as a literal ([[graft.functions.RequestLiteral]]): the scan prunes
-  *    cached batches on `ts >= <literal>` only, never on an expression.
+  *    [[graft.functions.RequestParam]] leaves, which no rule folds. Once
+  *    planned, each subexpression of parameters only (`:symbol`, the
+  *    cutoff `timestampadd(MINUTE, -:minutes, :asof)`) becomes one
+  *    numbered [[graft.functions.RequestSlot]]. A request evaluates each
+  *    slot's value once on the driver and sends it to its job's tasks as
+  *    a local property of its thread; generated code decodes it once per
+  *    task. So every request runs the same RDD, and its classes, which
+  *    were compiled when the endpoint was prepared.
+  *  - In the predicates of the in-memory `trades` scan a slot is a
+  *    [[graft.functions.SlotLiteral]]: the scan prunes cached batches on
+  *    `ts >= <literal>` only, never on an expression. It evaluates that
+  *    pruning predicate inside each task, where the literal reads its
+  *    slot.
   *  - `:limit` / `:top` are bound as literals at analysis: a LIMIT must be
   *    a constant there, and it decides the plan (a top-k
   *    `TakeOrderedAndProject` keeps that many rows). So each LIMIT value,
   *    with the text and the parameter types, keys its own prepared plan.
-  * [[Results.toJsonRows]] runs a request's bound copy of the prepared
-  * plan with the JSON rendering inside its projection, outside any SQL
-  * execution: no analysis, optimization, adaptive wrapper or compile per
-  * request. [[query]]'s DataFrame is a [[PreparedRequest]] leaf that
-  * plans onto the bound rows, so any other use of it keeps working. Other
-  * texts, and requests before a registration, run through `spark.sql`.
+  * [[Results.toJsonRows]] runs a request's job over the prepared RDD,
+  * whose plan holds the JSON rendering in its projection, outside any SQL
+  * execution: no analysis, optimization, plan copy, codegen or adaptive
+  * wrapper per request. [[query]]'s DataFrame is a [[PreparedRequest]]
+  * leaf that plans onto the prepared rows with the slot values bound as
+  * plain literals, so any other use of it keeps working. Other texts, and
+  * requests before a registration, run through `spark.sql`.
   *
   * Each request runs as ONE Spark job with one task. `trades` is served
-  * from Spark's in-memory columnar cache ([[registerViews]]), and the four
-  * aggregating texts filter inside a `/*+ COALESCE(1) */` subquery: a
-  * one-partition coalesce reports `SinglePartition`, which already
-  * satisfies both the aggregate's clustering and the ORDER BY's global
+  * from Spark's in-memory columnar cache ([[registerViews]]), and every
+  * text filters inside a `/*+ COALESCE(1) */` subquery: a one-partition
+  * coalesce reports `SinglePartition`, which already satisfies both an
+  * aggregate's clustering and the ORDER BY's global
   * ordering, so the plan needs no exchange (AQE would run each shuffle
   * stage as its own job) and no range-sampling job for the sort. This
   * costs no parallelism while `trades` is one file, whose scan is one
   * task anyway; on larger inputs it keeps a request on one core.
-  * `liveTradesSql` has no aggregate and runs as one job without the hint.
+  * `liveTradesSql` has no aggregate, but over more than one partition its
+  * top-k would shuffle the partitions' candidates together, and a
+  * prepared RDD must not shuffle.
   */
 object SqlApi {
 
@@ -199,12 +206,10 @@ object SqlApi {
     * shape as the builder twin (`trade_id` included: reference line 116
     * returns it and the tie-broken ordering exposes it). */
   val liveTradesSql: String =
-    """SELECT ts, symbol, trade_id, price, qty, is_buyer_maker
-      |FROM trades
-      |WHERE symbol = :symbol
-      |  AND ts >= timestampadd(MINUTE, -:minutes, CAST(:asof AS TIMESTAMP))
-      |ORDER BY ts DESC, trade_id DESC
-      |LIMIT :limit""".stripMargin
+    s"""SELECT ts, symbol, trade_id, price, qty, is_buyer_maker
+       |FROM ${lookback("symbol = :symbol AND ")}
+       |ORDER BY ts DESC, trade_id DESC
+       |LIMIT :limit""".stripMargin
 
   /** Q4 `/live_buy_sell` (reference: api/server.py:135-169) — the full
     * builder row shape (volumes, VWAPs, trade rate, total). Spark SQL

@@ -418,9 +418,11 @@ object BlockStore {
     * micro-batch) returns an explicit-`schema` EMPTY frame instead of
     * letting `spark.read.parquet` throw its unable-to-infer-schema
     * error on the bare root. Non-empty reads list the live block dirs
-    * explicitly, so the watermark filter applies to reads too. */
+    * explicitly, so the watermark filter applies to reads too.
+    * `mergeSchema` reads every block's footer, for a store whose blocks
+    * were written in more than one format. */
   def read(spark: SparkSession, partialsPath: String,
-           schema: StructType): DataFrame = {
+           schema: StructType, mergeSchema: Boolean = false): DataFrame = {
     val root = java.nio.file.Paths.get(partialsPath).toAbsolutePath
     val dirs =
       if (java.nio.file.Files.isDirectory(root)) blockDirs(root) else Nil
@@ -432,6 +434,7 @@ object BlockStore {
       // (and any inner physical key like the ANN store's `cell=`)
       // resolve as partition columns exactly as a whole-root read
       spark.read.option("basePath", root.toString)
+        .option("mergeSchema", mergeSchema)
         .parquet(dirs.map(_.toString): _*)
   }
 

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Streaming heavy-hitters materialized view on the Misra-Gries
   * mergeable summary ([[graft.functions.MisraGries]]) — the sketch
@@ -121,17 +122,23 @@ object HeavyHitters {
     * `n` resolution and the returned frame's aggregation both reuse
     * those rows instead of re-listing/re-reading every block file —
     * on a long-running store the file listing IS the dominant read
-    * cost. */
+    * cost. The read is [[graft.store.BlockStore.read]]'s: expired blocks
+    * are not read, and a store probed before its first block has no
+    * candidates. `itemType` is the item column's type in that empty
+    * frame, as `keyType` in [[HistogramMV.merged]]. */
   def candidates(spark: SparkSession, partialsPath: String, k: Int,
-                 frac: Double): DataFrame = {
+                 frac: Double, itemType: DataType = StringType): DataFrame = {
     require(frac > 1.0 / (k + 1),
       s"frac=$frac is below the k=$k summary's noise floor 1/(k+1)")
     // mergeSchema: in a mixed old/new-format store, a single sampled
     // footer would decide whether batch_nn exists at all (the slack
     // base would then vary with store layout); partials are O(k·blocks)
     // rows, so the footer merge costs nothing
-    val partials = spark.read.option("mergeSchema", "true")
-      .parquet(partialsPath).localCheckpoint(true)
+    val partials = graft.store.BlockStore.read(spark, partialsPath,
+      StructType(Seq(StructField("item", itemType), StructField("cnt", LongType),
+        StructField("batch_n", LongType), StructField("batch_nn", LongType),
+        StructField("block", IntegerType))),
+      mergeSchema = true).localCheckpoint(true)
     // Two different row counts, on purpose: the frac threshold is
     // defined against ALL rows of the stream (n, the total-rows
     // invariant), while the undercount slack derives from the NON-NULL

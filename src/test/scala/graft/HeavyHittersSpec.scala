@@ -153,6 +153,24 @@ class HeavyHittersSpec extends SparkSpec {
       "tight set is not a strict subset of the loose set")
   }
 
+  test("a store probed before its first block has no candidates; expired " +
+      "blocks are not read") {
+    import spark.implicits._
+    val partials = tmpDir("hh-empty")
+    val k = 4
+    val none = HeavyHitters.candidates(spark, partials, k, 0.5,
+      org.apache.spark.sql.types.LongType)
+    assert(none.collect().isEmpty)
+    assert(none.schema("item").dataType == org.apache.spark.sql.types.LongType)
+
+    HeavyHitters.writeBlock(Seq.fill(30)(7L).toDF("user_id"), "user_id", k, partials, 0L)
+    HeavyHitters.writeBlock(Seq.fill(30)(8L).toDF("user_id"), "user_id", k, partials, 1L)
+    BlockStore.expire(partials, beforeBlockId = 1L)
+    val cand = HeavyHitters.candidates(spark, partials, k, 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(cand.toSeq == Seq((8L, 30L)), s"candidates over the live block: ${cand.toSeq}")
+  }
+
   test("noise floor: frac at or below 1/(k+1) is rejected") {
     intercept[IllegalArgumentException] {
       HeavyHitters.candidates(spark, "/nonexistent", 4, 0.2)

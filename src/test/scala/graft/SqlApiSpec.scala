@@ -1,6 +1,10 @@
 package graft
 
+import java.util.Properties
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
@@ -12,6 +16,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.BeforeAndAfterAll
 
 import graft.api.{PreparedRequest, Results, SqlApi}
+import graft.functions.RequestSlot
 import graft.queries.TradeQueries
 
 /** The parameterized SQL entry path (S9): named-parameter binding returns
@@ -45,19 +50,24 @@ class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
   /** What `body` starts. */
   private case class Counts(jobs: Int, executions: Int, compiles: Long)
 
+  /** What `body` starts, the final RDD id of each job it starts, and
+    * each job's properties. */
+  private case class Seen(counts: Counts, finalRdds: Seq[Int], properties: Seq[Properties])
+
   /** Spark jobs and SQL executions `body` starts, and the classes it
     * compiles. Listener events are delivered in order, so once the
     * listener has seen a marker job submitted after `body`, it has seen
     * every event of `body`. */
-  private def countsOf(body: => Unit): Counts = {
+  private def seen(body: => Unit): Seen = {
     val sc = spark.sparkContext
     val group = s"sqlapi-${java.util.UUID.randomUUID}"
     val jobs, executions = new AtomicInteger
+    val starts = new ConcurrentLinkedQueue[SparkListenerJobStart]
     @volatile var markerSeen = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
-          if (g == group) jobs.incrementAndGet()
+          if (g == group) { jobs.incrementAndGet(); starts.add(e) }
           else if (g == group + "-marker") markerSeen = true
         }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -80,17 +90,23 @@ class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
         assert(System.nanoTime() < deadline, "marker job never reached the listener")
         Thread.sleep(10)
       }
-      Counts(jobs.get, executions.get, compiles)
+      val jobStarts = starts.asScala.toSeq
+      Seen(Counts(jobs.get, executions.get, compiles),
+        jobStarts.map(_.stageInfos.maxBy(_.stageId).rddInfos.map(_.id).max),
+        jobStarts.map(_.properties))
     } finally sc.removeSparkListener(listener)
   }
+
+  private def countsOf(body: => Unit): Counts = seen(body).counts
 
   /** Spark jobs `body` launches. */
   private def jobsOf(body: => Unit): Int = countsOf(body).jobs
 
-  /** The plan [[Results.toJsonRows]] runs for a prepared request. */
-  private def renderedPlan(df: org.apache.spark.sql.DataFrame) =
+  /** The plan of the RDD [[Results.toJsonRows]] runs for a prepared
+    * request. */
+  private def executable(df: org.apache.spark.sql.DataFrame) =
     df.queryExecution.logical match {
-      case r: PreparedRequest => r.prepared.renderedPlan(r.values)
+      case r: PreparedRequest => r.prepared.plan
       case other => fail(s"not a prepared request: $other")
     }
 
@@ -225,6 +241,7 @@ class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
     SqlApi.registerViews(spark, dir)
     val anchor = Tables.anchorMicros(spark, dir)
     val symbols = Seq("click", "error", "purchase", "signup", "view")
+    val finalRdds = scala.collection.mutable.Map.empty[String, Set[Seq[Int]]]
     for (endpoint <- Seq("ohlcv", "top_symbols", "live_trades", "live_buy_sell",
         "hist_buy_sell"); i <- 0 until 20) {
       // request i ends its window i minutes before the anchor, so its rows
@@ -250,13 +267,19 @@ class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
           TradeQueries.histBuySellFor(symbol, minutes + i)(spark, dir))
       }
       var rows = Seq.empty[String]
-      val counts = countsOf {
+      val s = seen {
         rows = Results.toJsonRows(SqlApi.query(spark, sql, a ++ extra))
       }
-      if (i > 0) assert(counts == Counts(jobs = 1, executions = 0, compiles = 0),
+      if (i > 0) assert(s.counts == Counts(jobs = 1, executions = 0, compiles = 0),
         s"$endpoint request $i (symbol $symbol, $minutes min)")
+      finalRdds(endpoint) = finalRdds.getOrElse(endpoint, Set.empty) + s.finalRdds
       assert(rows == Results.toJsonRows(twin),
         s"$endpoint request $i (symbol $symbol, $minutes min) differs from its builder twin")
+    }
+    // every request of an endpoint ran its one job over the same RDD
+    finalRdds.foreach { case (endpoint, rdds) =>
+      assert(rdds.size == 1 && rdds.head.size == 1,
+        s"$endpoint requests ran jobs over final RDDs $rdds")
     }
   }
 
@@ -264,14 +287,18 @@ class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
       "cutoff, and a refresh serves the new rows") {
     import java.nio.file.{Files, Paths}
     SqlApi.registerViews(spark, dir)
-    val plan = renderedPlan(SqlApi.query(spark, SqlApi.liveTradesSql,
+    val plan = executable(SqlApi.query(spark, SqlApi.liveTradesSql,
       args("symbol" -> "view", "minutes" -> 240L, "limit" -> 500)))
     val scans = plan.collect { case s: InMemoryTableScanExec => s }
     assert(scans.size == 1, s"expected one in-memory scan of trades: $plan")
-    assert(scans.head.predicates.exists {
-      case GreaterThanOrEqual(a: Attribute, _: Literal) => a.name == "ts"
-      case _ => false
-    }, s"no `ts >= <literal>` among the scan's predicates: ${scans.head.predicates}")
+    val cutoff = scans.head.predicates.collectFirst {
+      case p @ GreaterThanOrEqual(a: Attribute, _: Literal) if a.name == "ts" => p
+    }
+    assert(cutoff.isDefined,
+      s"no `ts >= <literal>` among the scan's predicates: ${scans.head.predicates}")
+    // the literal is a request slot, and prints as the parameters it holds
+    assert(cutoff.get.sql.matches("""\(.*ts >= timestampadd\(MINUTE, .*:minutes.*, :asof\)\)"""),
+      s"the cutoff predicate prints as ${cutoff.get.sql}")
     assert(plan.collect { case p @ (_: Exchange | _: AdaptiveSparkPlanExec) => p }.isEmpty,
       s"the prepared plan has an exchange or an adaptive wrapper: $plan")
 
@@ -293,5 +320,87 @@ class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
     Tables.invalidateAnchor(tmp)
     SqlApi.refreshViews(spark, tmp)
     assert(tradesInWindow() == 2 * rows, "a prepared endpoint served the old snapshot")
+  }
+
+  test("prepared endpoints: four threads' requests each get the single-threaded " +
+      "reply for their values") {
+    SqlApi.registerViews(spark, dir)
+    val anchor = Tables.anchorMicros(spark, dir)
+    val tuples = Seq(("click", 43200L, 0L), ("view", 20160L, 30L), ("purchase", 43200L, 600L),
+      ("error", 30000L, 7L)).map { case (symbol, minutes, back) =>
+        Map[String, Any]("symbol" -> symbol, "minutes" -> minutes,
+          "asof" -> Tables.microsToTimestamp(anchor - back * 60000000L))
+      }
+    def reply(a: Map[String, Any]): Seq[String] =
+      Results.toJsonRows(SqlApi.query(spark, SqlApi.histBuySellSql, a))
+    val want = tuples.map(reply)
+    assert(want.distinct.size == tuples.size && want.forall(_.nonEmpty),
+      "the tuples' replies must differ, or a mixed-up reply would pass")
+    val pool = Executors.newFixedThreadPool(tuples.size)
+    try {
+      val start = new CountDownLatch(1)
+      val replies = tuples.map(a => pool.submit(new Callable[Seq[Seq[String]]] {
+        override def call(): Seq[Seq[String]] = { start.await(); Seq.fill(10)(reply(a)) }
+      }))
+      start.countDown()
+      tuples.zip(want).zip(replies).foreach { case ((a, w), r) =>
+        assert(r.get(300, TimeUnit.SECONDS).forall(_ == w),
+          s"a concurrent request for $a got another reply than alone")
+      }
+    } finally pool.shutdownNow()
+  }
+
+  test("a prepared request leaves no request-slot local property on its thread " +
+      "or on the next job") {
+    SqlApi.registerViews(spark, dir)
+    val sc = spark.sparkContext
+    val prefix = RequestSlot.key(0).stripSuffix("0")
+    def slotKeys(p: Properties): Set[String] =
+      p.stringPropertyNames.asScala.filter(_.startsWith(prefix)).toSet
+    def request(): Seq[String] = Results.toJsonRows(SqlApi.query(spark,
+      SqlApi.ohlcvSql, args("symbol" -> "click", "minutes" -> 1440L)))
+    val during = seen(request())
+    assert(during.properties.map(slotKeys).exists(_.nonEmpty),
+      "the request's job carried no slot property, so this test shows nothing")
+    assert(slotKeys(during.properties.head).forall(k => sc.getLocalProperty(k) == null),
+      s"the thread still holds slot properties after the request")
+    val next = seen(sc.parallelize(Seq(1), 1).count())
+    assert(next.properties.map(slotKeys) == Seq(Set.empty),
+      s"the next plain job carried slot properties: ${next.properties}")
+
+    // a property the thread held under a slot's key is its own again
+    sc.setLocalProperty(RequestSlot.key(0), "held")
+    try {
+      request()
+      assert(sc.getLocalProperty(RequestSlot.key(0)) == "held")
+    } finally sc.setLocalProperty(RequestSlot.key(0), null)
+  }
+
+  test("one prepared RDD serves every window, and its in-memory scan prunes " +
+      "cached batches per request") {
+    val batchSize = "spark.sql.inMemoryColumnarStorage.batchSize"
+    val before = spark.conf.getOption(batchSize)
+    // small batches, so that a narrow window can skip some
+    spark.conf.set(batchSize, "100")
+    try {
+      SqlApi.registerViews(spark, dir)
+      def request(minutes: Long) = SqlApi.query(spark, SqlApi.topSymbolsSql,
+        args("minutes" -> minutes, "limit" -> 5))
+      val scan = executable(request(1L)).collectFirst { case s: InMemoryTableScanExec => s }
+        .getOrElse(fail("no in-memory scan in the prepared plan"))
+      def scanned(minutes: Long): (Long, Seq[Int]) = {
+        val rows0 = scan.metrics("numOutputRows").value
+        val s = seen(Results.toJsonRows(request(minutes)))
+        (scan.metrics("numOutputRows").value - rows0, s.finalRdds)
+      }
+      val (narrow, narrowRdds) = scanned(1L)
+      val (wide, wideRdds) = scanned(43200L)
+      assert(narrowRdds.size == 1 && narrowRdds == wideRdds,
+        s"the requests ran jobs over final RDDs $narrowRdds and $wideRdds")
+      assert(narrow < wide, s"a 1-minute request scanned $narrow rows, a 30-day one $wide")
+    } finally {
+      before.fold(spark.conf.unset(batchSize))(spark.conf.set(batchSize, _))
+      SqlApi.registerViews(spark, dir)
+    }
   }
 }
