@@ -70,7 +70,9 @@ private[graft] final class Prepared(spark: SparkSession, rows: DataFrame) {
   def request(values: Map[String, Any]): DataFrame =
     GraftBridge.ofRows(spark, PreparedRequest(this, values))
 
-  /** [[raw]] with the slot values of `values` bound as plain literals. */
+  /** [[raw]] with the slot values of `values` bound as plain literals:
+    * each distinct value compiles its own classes (the DataFrame path;
+    * [[jsonRows]] compiles none). */
   private[api] def rawPlan(values: Map[String, Any]): SparkPlan =
     Prepared.mapParameterOnly(raw)((e, _) => Literal(Prepared.value(e, values), e.dataType))
 

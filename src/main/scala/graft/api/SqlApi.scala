@@ -47,7 +47,11 @@ import graft.Tables
   * execution: no analysis, optimization, plan copy, codegen or adaptive
   * wrapper per request. [[query]]'s DataFrame is a [[PreparedRequest]]
   * leaf that plans onto the prepared rows with the slot values bound as
-  * plain literals, so any other use of it keeps working. Other texts, and
+  * plain literals, so any other use of it keeps working; but that use
+  * (`collect`, `show`, a join over the leaf) compiles new classes for
+  * each distinct cutoff or symbol, since a plain literal is inlined into
+  * the generated source. Only [[Results.toJsonRows]] is compile-free per
+  * request. Other texts, and
   * requests before a registration, run through `spark.sql`.
   *
   * Each request runs as ONE Spark job with one task. `trades` is served

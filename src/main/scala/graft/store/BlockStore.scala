@@ -429,13 +429,14 @@ object BlockStore {
     if (dirs.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], schema)
-    else
+    else {
       // basePath anchors partition discovery at the root, so `block=`
       // (and any inner physical key like the ANN store's `cell=`)
       // resolve as partition columns exactly as a whole-root read
-      spark.read.option("basePath", root.toString)
-        .option("mergeSchema", mergeSchema)
+      val reader = spark.read.option("basePath", root.toString)
+      (if (mergeSchema) reader.option("mergeSchema", "true") else reader)
         .parquet(dirs.map(_.toString): _*)
+    }
   }
 
   /** Retire every block with id < `beforeBlockId`: rewrite the root

@@ -124,10 +124,9 @@ object HeavyHitters {
     * on a long-running store the file listing IS the dominant read
     * cost. The read is [[graft.store.BlockStore.read]]'s: expired blocks
     * are not read, and a store probed before its first block has no
-    * candidates. `itemType` is the item column's type in that empty
-    * frame, as `keyType` in [[HistogramMV.merged]]. */
+    * candidates. */
   def candidates(spark: SparkSession, partialsPath: String, k: Int,
-                 frac: Double, itemType: DataType = StringType): DataFrame = {
+                 frac: Double): DataFrame = {
     require(frac > 1.0 / (k + 1),
       s"frac=$frac is below the k=$k summary's noise floor 1/(k+1)")
     // mergeSchema: in a mixed old/new-format store, a single sampled
@@ -135,7 +134,7 @@ object HeavyHitters {
     // base would then vary with store layout); partials are O(k·blocks)
     // rows, so the footer merge costs nothing
     val partials = graft.store.BlockStore.read(spark, partialsPath,
-      StructType(Seq(StructField("item", itemType), StructField("cnt", LongType),
+      StructType(Seq(StructField("item", StringType), StructField("cnt", LongType),
         StructField("batch_n", LongType), StructField("batch_nn", LongType),
         StructField("block", IntegerType))),
       mergeSchema = true).localCheckpoint(true)
