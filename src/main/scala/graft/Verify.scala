@@ -2,7 +2,9 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * throws is logged and the sweep goes on; at the end the run exits 1 and
+  * names every query that threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -55,18 +57,20 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None        => SparkEntry.queries
     }
-    selected.foreach { case (name, fn) =>
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
       // remove any previous run's output FIRST: on failure a stale
       // result must not survive to be compared as if it were current
       val target = Paths.get(s"$outDir/$name")
       if (Files.exists(target)) graft.store.Store.deleteRecursively(target)
       // NonFatal only: a fatal error (OOM) poisons the JVM — dying with
       // rc != 0 beats emitting half-written results as if valid
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case scala.util.control.NonFatal(e) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: $e")
         e.getStackTrace.take(8).foreach(f => System.err.println(s"    $f"))
+        Some(name)
       }
     }
     val dumped = only match {
@@ -78,5 +82,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

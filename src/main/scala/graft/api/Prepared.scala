@@ -17,8 +17,10 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{RequestParam, RequestSlot, SlotLiteral}
 
-/** One endpoint text, parsed, analyzed, optimized, planned, compiled and
-  * built into one RDD once; see [[SqlApi]] for what is bound where.
+/** One endpoint text, parsed, analyzed, optimized, planned, compiled,
+  * built into one single-partition RDD and serialized as its task binary
+  * once; each request runs that task on its own thread. See [[SqlApi]]
+  * for what is bound where.
   *
   * @param rows the endpoint's rows, analyzed with [[RequestParam]]s */
 private[graft] final class Prepared(spark: SparkSession, rows: DataFrame) {
@@ -43,12 +45,18 @@ private[graft] final class Prepared(spark: SparkSession, rows: DataFrame) {
     if (inScan) new SlotLiteral(slot) else slot
   }
 
-  /** [[plan]]'s RDD, built with `execute()` (a driver-side `executeCollect`
-    * would evaluate slots outside any task). Each request runs it again:
-    * a shuffle in it would serve its first run's output to every later
-    * one, so the endpoint texts plan none. */
-  private val rdd: RDD[InternalRow] = GraftBridge.withSessionConf(spark)(plan.execute())
-  require(!Prepared.shuffles(rdd), s"a prepared endpoint plans a shuffle: $plan")
+  /** The one partition of [[plan]]'s RDD, and the RDD as the task binary
+    * every request runs on its own thread ([[GraftBridge.runTask]]). The
+    * RDD is built with `execute()` (a driver-side `executeCollect` would
+    * evaluate slots outside any task). A request runs one task of the
+    * final stage and no other stage, so the endpoint texts plan one
+    * partition and no shuffle. */
+  private val (partition, binary) = {
+    val rdd = GraftBridge.withSessionConf(spark)(plan.execute())
+    require(rdd.getNumPartitions == 1 && !Prepared.shuffles(rdd),
+      s"a prepared endpoint plans more than one partition or a shuffle: $plan")
+    (rdd.partitions.head, GraftBridge.taskBinary(rdd))
+  }
 
   /** [[rows]] as planned, before the execution preparations: the plan of
     * [[PreparedRequest]]'s DataFrame path, planned on its first use. A
@@ -77,9 +85,10 @@ private[graft] final class Prepared(spark: SparkSession, rows: DataFrame) {
     Prepared.mapParameterOnly(raw)((e, _) => Literal(Prepared.value(e, values), e.dataType))
 
   /** The JSON rows `values` select: the slot values are evaluated once
-    * here, sent to the tasks as this thread's local properties for one
-    * job over [[rdd]], and the thread's own properties restored. No
-    * analysis, planning, codegen or SQL execution. */
+    * here and set as this thread's local properties, the endpoint's one
+    * task runs on this thread ([[GraftBridge.runTask]]), and the thread's
+    * own properties are restored. No analysis, planning, codegen, SQL
+    * execution or Spark job. */
   private[api] def jsonRows(values: Map[String, Any]): Seq[String] = {
     val sc = spark.sparkContext
     val keys = slots.indices.map(RequestSlot.key)
@@ -88,8 +97,8 @@ private[graft] final class Prepared(spark: SparkSession, rows: DataFrame) {
       keys.zip(slots).foreach { case (k, e) =>
         sc.setLocalProperty(k, RequestSlot.encode(Prepared.value(e, values)))
       }
-      GraftBridge.withSessionConf(spark)(sc.runJob(rdd, Prepared.json))
-        .iterator.flatten.toIndexedSeq
+      GraftBridge.withSessionConf(spark)(
+        GraftBridge.runTask(sc, binary, partition)(Prepared.json))
     } finally keys.zip(previous).foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 }
@@ -127,8 +136,8 @@ private[api] object Prepared {
   def value(e: Expression, values: Map[String, Any]): Any =
     e.transform { case RequestParam(n, t) => Literal(values(n), t) }.eval()
 
-  private val json = (rows: Iterator[InternalRow]) =>
-    rows.map(_.getUTF8String(0).toString).toArray
+  private def json(rows: Iterator[InternalRow]): Seq[String] =
+    rows.map(_.getUTF8String(0).toString).toIndexedSeq
 
   /** Whether running `rdd` runs a shuffle, above any persisted RDD. */
   private def shuffles(rdd: RDD[_]): Boolean = rdd.dependencies.exists {

@@ -36,11 +36,11 @@ object Results {
     *
     * A prepared endpoint request ([[SqlApi.query]]) renders through the
     * RDD prepared with its endpoint, whose plan already holds this
-    * projection ([[render]]) over the endpoint's rows: the request sends
-    * its slot values to that RDD's tasks and runs it as one job that
-    * collects the JSON strings, with no new analysis, planning, plan copy
-    * or codegen (the [[SqlApi]] note). Any other DataFrame is rendered
-    * and collected here. */
+    * projection ([[render]]) over the endpoint's rows: the request hands
+    * its slot values to that RDD's one task and runs the task on this
+    * thread, collecting the JSON strings, with no new analysis, planning,
+    * plan copy, codegen or Spark job (the [[SqlApi]] note). Any other
+    * DataFrame is rendered and collected here, as a job. */
   def toJsonRows(df: DataFrame): Seq[String] = df.queryExecution.logical match {
     case r: PreparedRequest => r.prepared.jsonRows(r.values)
     case _ => render(df).collect().map(_.getString(0)).toIndexedSeq

@@ -21,16 +21,16 @@ import graft.Tables
   * semantics.
   *
   * Prepared endpoints. An endpoint text is parsed, analyzed, optimized,
-  * planned, compiled and built into one RDD once per registration
-  * ([[registerViews]]) and `LIMIT` value, on its first request
-  * ([[Prepared]]). What is bound where:
+  * planned, compiled, built into one RDD and serialized as that RDD's
+  * task binary once per registration ([[registerViews]]) and `LIMIT`
+  * value, on its first request ([[Prepared]]). What is bound where:
   *  - `:symbol`, `:minutes` and `:asof` enter the plan as
   *    [[graft.functions.RequestParam]] leaves, which no rule folds. Once
   *    planned, each subexpression of parameters only (`:symbol`, the
   *    cutoff `timestampadd(MINUTE, -:minutes, :asof)`) becomes one
   *    numbered [[graft.functions.RequestSlot]]. A request evaluates each
-  *    slot's value once on the driver and sends it to its job's tasks as
-  *    a local property of its thread; generated code decodes it once per
+  *    slot's value once on the driver and hands it to its task as a
+  *    local property of its thread; generated code decodes it once per
   *    task. So every request runs the same RDD, and its classes, which
   *    were compiled when the endpoint was prepared.
   *  - In the predicates of the in-memory `trades` scan a slot is a
@@ -42,10 +42,10 @@ import graft.Tables
   *    a constant there, and it decides the plan (a top-k
   *    `TakeOrderedAndProject` keeps that many rows). So each LIMIT value,
   *    with the text and the parameter types, keys its own prepared plan.
-  * [[Results.toJsonRows]] runs a request's job over the prepared RDD,
+  * [[Results.toJsonRows]] runs a request's task over the prepared RDD,
   * whose plan holds the JSON rendering in its projection, outside any SQL
-  * execution: no analysis, optimization, plan copy, codegen or adaptive
-  * wrapper per request. [[query]]'s DataFrame is a [[PreparedRequest]]
+  * execution: no analysis, optimization, plan copy, codegen, adaptive
+  * wrapper or Spark job per request. [[query]]'s DataFrame is a [[PreparedRequest]]
   * leaf that plans onto the prepared rows with the slot values bound as
   * plain literals, so any other use of it keeps working; but that use
   * (`collect`, `show`, a join over the leaf) compiles new classes for
@@ -54,13 +54,21 @@ import graft.Tables
   * request. Other texts, and
   * requests before a registration, run through `spark.sql`.
   *
-  * Each request runs as ONE Spark job with one task. `trades` is served
+  * Each request runs as ONE task, on the calling thread, the way an
+  * executor runs a task ([[org.apache.spark.sql.GraftBridge.runTask]]):
+  * no job, stage, scheduler round trip, task-binary broadcast or result
+  * serialization. It reads the snapshot's blocks from this JVM's block
+  * manager, which holds them because the engine's sessions are all local
+  * (`graft.Session.builder`). Its metrics reach the prepared plan's SQL
+  * metrics, but no listener sees the task. `trades` is served
   * from Spark's in-memory columnar cache ([[registerViews]]), and every
   * text filters inside a `/*+ COALESCE(1) */` subquery: a one-partition
   * coalesce reports `SinglePartition`, which already satisfies both an
   * aggregate's clustering and the ORDER BY's global
-  * ordering, so the plan needs no exchange (AQE would run each shuffle
-  * stage as its own job) and no range-sampling job for the sort. This
+  * ordering, so the plan needs no exchange (a prepared RDD must not
+  * shuffle, and must be one partition) and no range-sampling job for the
+  * sort. The [[query]] DataFrame path is an ordinary job, and under
+  * AQE each shuffle stage would be a job of its own there. This
   * costs no parallelism while `trades` is one file, whose scan is one
   * task anyway; on larger inputs it keeps a request on one core.
   * `liveTradesSql` has no aggregate, but over more than one partition its
@@ -85,8 +93,9 @@ object SqlApi {
     * and cache `trades` as an in-memory columnar snapshot
     * (`spark.catalog.cacheTable`): requests then scan compressed
     * in-memory batches, pruned by their per-batch `ts` bounds, instead of
-    * reopening and decoding parquet. The snapshot is built here, so the
-    * first request after a registration runs as one job too, and lives
+    * reopening and decoding parquet. The snapshot is built here, so no
+    * request builds it (under AQE the [[query]] DataFrame path would
+    * build an unbuilt cache in a job of its own), and it lives
     * until [[refreshViews]] (or another registration) drops it together
     * with the session's prepared endpoints. Spark's cache manager matches
     * plans, so while it lives any `Tables.trades(spark, dir)` (without a
@@ -183,7 +192,7 @@ object SqlApi {
 
   /** The `trades` rows of a request's lookback window (and `pred`, an
     * extra conjunct ending in `AND `), coalesced to one partition — the
-    * one-job shape of the object note. */
+    * one-task shape of the object note. */
   private def lookback(pred: String = ""): String =
     s"""(SELECT /*+ COALESCE(1) */ * FROM trades
        |  WHERE ${pred}ts >= timestampadd(MINUTE, -:minutes, CAST(:asof AS TIMESTAMP)))""".stripMargin

@@ -29,8 +29,8 @@ case class RequestParam(name: String, dataType: DataType) extends LeafExpression
 
 /** Slot `index` of a prepared plan: the value of one subexpression of
   * request parameters only, `source` (its SQL, e.g. `:symbol` or the
-  * cutoff `timestampadd(MINUTE, -:minutes, :asof)`). A request sends its
-  * values to its job's tasks as local properties ([[key]], [[encode]]),
+  * cutoff `timestampadd(MINUTE, -:minutes, :asof)`). A request hands its
+  * values to its task as local properties ([[key]], [[encode]]),
   * so one plan, one RDD and one compiled class serve every request.
   * Generated code decodes the value into mutable state when the task
   * initialises the class, never per row. */

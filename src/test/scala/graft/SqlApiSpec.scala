@@ -4,15 +4,22 @@ import java.util.Properties
 import java.util.concurrent.{Callable, ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.{SparkEnv, TaskContext}
+import org.apache.spark.memory.{MemoryConsumer, MemoryMode, TaskMemoryManager}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.{Attribute, GreaterThanOrEqual, Literal}
+import org.apache.spark.sql.columnar.CachedBatch
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.storage.RDDBlockId
 import org.scalatest.BeforeAndAfterAll
 
 import graft.api.{PreparedRequest, Results, SqlApi}
@@ -22,7 +29,8 @@ import graft.queries.TradeQueries
 /** The parameterized SQL entry path (S9): named-parameter binding returns
   * the same results as the DataFrame builders, parameters actually vary
   * the result, the bound cutoff reaches the scan as a literal filter,
-  * every request runs as one job, and a refresh serves changed files. */
+  * a DataFrame request runs as one job and a prepared request as one task
+  * on the calling thread, and a refresh serves changed files. */
 class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
     with AdaptiveSparkPlanHelper {
 
@@ -50,9 +58,8 @@ class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
   /** What `body` starts. */
   private case class Counts(jobs: Int, executions: Int, compiles: Long)
 
-  /** What `body` starts, the final RDD id of each job it starts, and
-    * each job's properties. */
-  private case class Seen(counts: Counts, finalRdds: Seq[Int], properties: Seq[Properties])
+  /** What `body` starts, and each job's properties. */
+  private case class Seen(counts: Counts, properties: Seq[Properties])
 
   /** Spark jobs and SQL executions `body` starts, and the classes it
     * compiles. Listener events are delivered in order, so once the
@@ -91,9 +98,7 @@ class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
         Thread.sleep(10)
       }
       val jobStarts = starts.asScala.toSeq
-      Seen(Counts(jobs.get, executions.get, compiles),
-        jobStarts.map(_.stageInfos.maxBy(_.stageId).rddInfos.map(_.id).max),
-        jobStarts.map(_.properties))
+      Seen(Counts(jobs.get, executions.get, compiles), jobStarts.map(_.properties))
     } finally sc.removeSparkListener(listener)
   }
 
@@ -101,6 +106,15 @@ class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
 
   /** Spark jobs `body` launches. */
   private def jobsOf(body: => Unit): Int = countsOf(body).jobs
+
+  /** The RDDs `body` builds: the id of a marker RDD made after it less
+    * that of one made before it, less one. */
+  private def rddsBuilt(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val before = sc.emptyRDD[Int].id
+    body
+    sc.emptyRDD[Int].id - before - 1
+  }
 
   /** The plan of the RDD [[Results.toJsonRows]] runs for a prepared
     * request. */
@@ -237,11 +251,11 @@ class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
   }
 
   test("prepared endpoints: after an endpoint's first request, each request runs " +
-      "one job, compiles no class, starts no SQL execution and equals its builder twin") {
+      "no job, builds no RDD, compiles no class, starts no SQL execution and equals " +
+      "its builder twin") {
     SqlApi.registerViews(spark, dir)
     val anchor = Tables.anchorMicros(spark, dir)
     val symbols = Seq("click", "error", "purchase", "signup", "view")
-    val finalRdds = scala.collection.mutable.Map.empty[String, Set[Seq[Int]]]
     for (endpoint <- Seq("ohlcv", "top_symbols", "live_trades", "live_buy_sell",
         "hist_buy_sell"); i <- 0 until 20) {
       // request i ends its window i minutes before the anchor, so its rows
@@ -267,19 +281,18 @@ class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
           TradeQueries.histBuySellFor(symbol, minutes + i)(spark, dir))
       }
       var rows = Seq.empty[String]
+      var rdds = 0
       val s = seen {
-        rows = Results.toJsonRows(SqlApi.query(spark, sql, a ++ extra))
+        rdds = rddsBuilt { rows = Results.toJsonRows(SqlApi.query(spark, sql, a ++ extra)) }
       }
-      if (i > 0) assert(s.counts == Counts(jobs = 1, executions = 0, compiles = 0),
-        s"$endpoint request $i (symbol $symbol, $minutes min)")
-      finalRdds(endpoint) = finalRdds.getOrElse(endpoint, Set.empty) + s.finalRdds
+      // the first request prepares the endpoint, which builds its RDD
+      if (i > 0) {
+        assert(s.counts == Counts(jobs = 0, executions = 0, compiles = 0),
+          s"$endpoint request $i (symbol $symbol, $minutes min)")
+        assert(rdds == 0, s"$endpoint request $i built $rdds RDDs")
+      }
       assert(rows == Results.toJsonRows(twin),
         s"$endpoint request $i (symbol $symbol, $minutes min) differs from its builder twin")
-    }
-    // every request of an endpoint ran its one job over the same RDD
-    finalRdds.foreach { case (endpoint, rdds) =>
-      assert(rdds.size == 1 && rdds.head.size == 1,
-        s"$endpoint requests ran jobs over final RDDs $rdds")
     }
   }
 
@@ -357,13 +370,16 @@ class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
     val prefix = RequestSlot.key(0).stripSuffix("0")
     def slotKeys(p: Properties): Set[String] =
       p.stringPropertyNames.asScala.filter(_.startsWith(prefix)).toSet
-    def request(): Seq[String] = Results.toJsonRows(SqlApi.query(spark,
-      SqlApi.ohlcvSql, args("symbol" -> "click", "minutes" -> 1440L)))
-    val during = seen(request())
-    assert(during.properties.map(slotKeys).exists(_.nonEmpty),
-      "the request's job carried no slot property, so this test shows nothing")
-    assert(slotKeys(during.properties.head).forall(k => sc.getLocalProperty(k) == null),
-      s"the thread still holds slot properties after the request")
+    def request(symbol: String = "click"): Seq[String] = Results.toJsonRows(
+      SqlApi.query(spark, SqlApi.ohlcvSql, args("symbol" -> symbol, "minutes" -> 1440L)))
+    // more keys than the endpoint has slots
+    val keys = (0 until 10).map(RequestSlot.key)
+    assert(keys.forall(sc.getLocalProperty(_) == null))
+    val (click, view) = (request(), request("view"))
+    assert(click.nonEmpty && view.nonEmpty && click != view,
+      "the replies must differ with the slot values, or a lost value would pass")
+    assert(keys.forall(sc.getLocalProperty(_) == null),
+      s"the thread still holds slot properties after the requests")
     val next = seen(sc.parallelize(Seq(1), 1).count())
     assert(next.properties.map(slotKeys) == Seq(Set.empty),
       s"the next plain job carried slot properties: ${next.properties}")
@@ -388,19 +404,67 @@ class SqlApiSpec extends SparkSpec with BeforeAndAfterAll
         args("minutes" -> minutes, "limit" -> 5))
       val scan = executable(request(1L)).collectFirst { case s: InMemoryTableScanExec => s }
         .getOrElse(fail("no in-memory scan in the prepared plan"))
-      def scanned(minutes: Long): (Long, Seq[Int]) = {
+      // the request's task runs on a copy of the plan; its metrics reach the
+      // prepared plan's scan only by the merge after the task
+      def scanned(minutes: Long): Long = {
         val rows0 = scan.metrics("numOutputRows").value
-        val s = seen(Results.toJsonRows(request(minutes)))
-        (scan.metrics("numOutputRows").value - rows0, s.finalRdds)
+        var rdds = 0
+        val s = seen { rdds = rddsBuilt(Results.toJsonRows(request(minutes))) }
+        assert(s.counts.jobs == 0 && rdds == 0,
+          s"a $minutes-minute request ran ${s.counts.jobs} jobs and built $rdds RDDs")
+        scan.metrics("numOutputRows").value - rows0
       }
-      val (narrow, narrowRdds) = scanned(1L)
-      val (wide, wideRdds) = scanned(43200L)
-      assert(narrowRdds.size == 1 && narrowRdds == wideRdds,
-        s"the requests ran jobs over final RDDs $narrowRdds and $wideRdds")
-      assert(narrow < wide, s"a 1-minute request scanned $narrow rows, a 30-day one $wide")
+      val narrow = scanned(1L)
+      val wide = scanned(43200L)
+      assert(0 < narrow && narrow < wide,
+        s"a 1-minute request scanned $narrow rows, a 30-day one $wide")
     } finally {
       before.fold(spark.conf.unset(batchSize))(spark.conf.set(batchSize, _))
       SqlApi.registerViews(spark, dir)
     }
+  }
+
+  test("a calling-thread task that throws after reading the snapshot throws to its " +
+      "caller and leaves no execution memory and no block read lock behind") {
+    SqlApi.registerViews(spark, dir)
+    val env = SparkEnv.get
+    val batches = spark.table("trades").queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers }
+      .getOrElse(fail("trades is not cached"))
+    val failing = batches.mapPartitions(SqlApiSpec.readThenFail)
+    assert(failing.getNumPartitions == 1)
+    val binary = GraftBridge.taskBinary(failing)
+    val used = env.memoryManager.executionMemoryUsed
+    val e = intercept[IllegalStateException](
+      GraftBridge.runTask(spark.sparkContext, binary, failing.partitions.head)(_.size))
+    assert(e.getMessage == SqlApiSpec.failure)
+    assert(env.memoryManager.executionMemoryUsed == used,
+      "the failed task's execution memory was not released")
+    // removing a block waits until no task holds a read lock on it
+    val removal = Future(env.blockManager.removeBlock(RDDBlockId(batches.id, 0)))(
+      ExecutionContext.global)
+    try Await.result(removal, 30.seconds)
+    catch { case _: java.util.concurrent.TimeoutException =>
+      fail("the failed task left a read lock on the snapshot's block") }
+    spark.catalog.uncacheTable("trades")
+  }
+}
+
+object SqlApiSpec {
+  val failure = "a task failure after a snapshot read"
+
+  /** Reads one cached batch of the snapshot (its block stays read-locked
+    * until the iterator ends), takes execution memory, and throws. */
+  def readThenFail(batches: Iterator[CachedBatch]): Iterator[Int] = {
+    batches.next()
+    // `TaskContext.taskMemoryManager` is Spark-private, but public in bytecode
+    val task = TaskContext.get
+    val memory = task.getClass.getMethod("taskMemoryManager").invoke(task)
+      .asInstanceOf[TaskMemoryManager]
+    val consumer = new MemoryConsumer(memory, MemoryMode.ON_HEAP) {
+      override def spill(size: Long, trigger: MemoryConsumer): Long = 0L
+    }
+    assert(consumer.acquireMemory(1L << 20) > 0)
+    throw new IllegalStateException(failure)
   }
 }
